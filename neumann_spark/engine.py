@@ -20,7 +20,6 @@ cursors map to `toLocalIterator` batches (`relational_engine/src/cursor.rs`).
 from __future__ import annotations
 
 import ast
-import os
 import re
 from collections import OrderedDict
 from typing import Iterator, Optional
@@ -34,14 +33,11 @@ from neumann_spark.graph.model import edges_df, nodes_df, undirected_edges
 from neumann_spark.graph.traversal import bfs_levels
 from neumann_spark.session import local_df, run_actions_parallel
 
-# Overlay lineage-truncation cadence (statements between lazy
-# localCheckpoints of the session overlays). 1 = every statement
-# boundary: each validation/read action then replays only the latest
-# statement's delta instead of the whole chain since the last
-# checkpoint (VERDICT r13 item 4, §5) — the materialized state is
-# per-overlay bounded and superseded copies are unpersisted by
-# ContextCleaner once the driver drops its references.
-_OVERLAY_CP_EVERY = int(os.environ.get("NEUMANN_OVERLAY_CP_EVERY", "8"))
+# Overlay lineage-truncation cadence: mutations between lazy
+# localCheckpoints of the session overlays. OPTIMIZATION_r14 measured
+# cadence 1 against 8: walls within noise and at most 2 fewer jobs per
+# query, while 8 keeps fewer materialized overlay copies.
+_OVERLAY_CP_EVERY = 8
 
 
 class NeumannSparkEngine:
@@ -1702,9 +1698,9 @@ class NeumannSparkEngine:
     def _checkpoint_overlays(self) -> None:
         """Cap lineage growth: lazy-localCheckpoint the overlays at
         statement boundaries so a mutation session doesn't build an
-        ever-deeper union/anti-join plan. Cadence is env-tunable
-        (NEUMANN_OVERLAY_CP_EVERY); see OPTIMIZATION_r14 for the
-        measured job/wall numbers behind the default."""
+        ever-deeper union/anti-join plan. Every `_OVERLAY_CP_EVERY`-th
+        mutation checkpoints; OPTIMIZATION_r14 has the job/wall numbers
+        behind that cadence."""
         self._mutations += 1
         if self._mutations % _OVERLAY_CP_EVERY == 0:
             self._nodes = self._nodes.localCheckpoint(eager=False)

@@ -2597,10 +2597,10 @@ def _graph_rescore_from(spark: SparkSession, sf_dir: str, index: tuple,
     )
     # The per-cell distances are computed IN SPARK (HALF_UP round6, the
     # oracle grid) but collected ONCE (bounded: S·K rows) and re-embedded
-    # as a flat literal array — `local_df` frames are 1-slice RDDs, so a
-    # per-action F.broadcast(lut) join paid one broadcast-build job per
-    # serve round; the element_at lookup is join-free and bit-exact (the
-    # collected doubles round-trip the driver unchanged). Codes always
+    # as a flat literal array, so every serve round's ADC scoring is a
+    # join-free element_at lookup instead of a per-round F.broadcast(lut)
+    # join; the lookup is bit-exact (the collected doubles round-trip the
+    # driver unchanged). Codes always
     # hit a populated cell: they were argmin-assigned over these same
     # codebooks, so the inner-join and lookup forms agree row-for-row.
     lut_flat: list = [None] * (GRAPH_PQ_S * GRAPH_PQ_K)

@@ -10,6 +10,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def jobs_run(spark, action):
+    """(action's result, Spark jobs it scheduled), counted by the DAG
+    scheduler's job id counter."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    out = action()
+    return out, sched.nextJobId() - before
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run
 
 
 @pytest.fixture(scope="module")
@@ -1834,3 +1834,54 @@ def test_drop_table_unshadows_fixture(engine):
     engine.execute("DROP TABLE nation")
     n = engine.execute("SELECT COUNT(*) AS n FROM nation").collect()[0]["n"]
     assert n == 25  # fixture nation is back
+
+
+def _python_rdd_scans(df) -> list[str]:
+    """RDD-backed leaves of `df`'s plan whose lineage runs through a
+    PythonRDD, i.e. scans whose every task calls a Python worker. JVM-only
+    RDD scans (the eagerly checkpointed base graph) do not count."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    found = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if (leaf.nodeName() == "LogicalRDD"
+                and "PythonRDD" in leaf.rdd().toDebugString()):
+            found.append(leaf.toString())
+    return found
+
+
+def test_statement_plans_have_no_python_scan(spark):
+    """Statement literals (INSERT rows, NODE/EDGE/EMBED overlay deltas,
+    acks, BFS seeds) are JVM LocalRelations: after each kind of write,
+    the session-table SELECT, FIND, NEIGHBORS and SIMILAR plans carry no
+    Python-backed RDD scan, and a plain INSERT ack runs no Spark job."""
+    from neumann_spark.engine import NeumannSparkEngine
+
+    eng = NeumannSparkEngine(spark, SF_DIR)
+    vec = "[" + ", ".join(["0.25"] * 64) + "]"
+    eng.execute("CREATE TABLE shape_notes (id INT, grp INT, qty INT, body TEXT)")
+    ack = eng.execute("INSERT INTO shape_notes VALUES (1, 2, 3, 'x')")
+    rows, jobs = jobs_run(spark, ack.collect)
+    assert rows[0]["inserted"] == 1 and jobs == 0
+    eng.execute("NODE CREATE shape_person {id: 9300001}")
+    eng.execute("EDGE CREATE 17 -> 9300001 : knows")
+    eng.execute(f"EMBED STORE 'shape:1' {vec}")
+    for cmd in ("SELECT count(*) AS n, sum(qty) AS q FROM shape_notes "
+                "WHERE grp = 2",
+                "FIND NODES shape_person",
+                "NEIGHBORS 17 OUTGOING : knows",
+                "SIMILAR 'shape:1' TOP 5"):
+        df = eng.execute(cmd)
+        assert df.collect(), cmd
+        assert _python_rdd_scans(df) == [], cmd
+
+
+def test_embed_store_get_float32_fidelity(engine):
+    """EMBED STORE → EMBED GET returns exactly the float32 rounding of
+    the stored values (the embedding column is array<float>)."""
+    import numpy as np
+
+    vals = np.random.default_rng(11).normal(size=64).tolist()
+    engine.execute("EMBED STORE 'f32:1' [" + ", ".join(map(repr, vals)) + "]")
+    got = engine.execute("EMBED GET 'f32:1'").collect()[0]["embedding"]
+    assert got == np.asarray(vals, dtype=np.float32).tolist()

@@ -6,9 +6,10 @@ reference's hand-built fast paths (SURVEY.md §4 table)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run
 
 
 def _plan(df) -> str:
@@ -370,11 +371,11 @@ def test_batch_probe_join_form_is_hash_join(spark, tmp_path):
         assert (" IN (" in scan) or (" INSET " in scan), scan
 
 
-def test_local_df_one_slice_and_empty_local_relation(spark):
-    """The driver-local batch helpers (§5): `local_df` must carry a handful
-    of statement rows in ONE partition (plain createDataFrame spreads them
-    over defaultParallelism — 32 no-op tasks per action on every mutation
-    chain), produce values/schema identical to createDataFrame, and
+def test_local_df_local_relation_and_empty_local_relation(spark):
+    """The driver-local batch helpers (§5): `local_df` must build its rows
+    as a JVM `LocalRelation` (plain createDataFrame is a LogicalRDD over a
+    PythonRDD, so every action pays a job and a Python-worker round trip
+    per task), produce values/schema identical to createDataFrame, and
     `empty_df` must be a true LocalRelation so PropagateEmptyRelation can
     prune it out of the overlay union chains entirely."""
     from neumann_spark.session import empty_df, local_df
@@ -383,10 +384,13 @@ def test_local_df_one_slice_and_empty_local_relation(spark):
     schema = "id bigint, s string, v array<double>"
     ours = local_df(spark, rows, schema)
     ref = spark.createDataFrame(rows, schema)
-    assert ours.rdd.getNumPartitions() == 1
-    assert ref.rdd.getNumPartitions() > 1  # the cost local_df removes
+    analyzed = ours._jdf.queryExecution().analyzed()
+    assert analyzed.nodeName() == "LocalRelation", analyzed.toString()
+    got, jobs = jobs_run(spark, ours.collect)
+    assert jobs == 0
+    assert jobs_run(spark, ref.collect)[1] > 0  # the cost local_df removes
     assert ours.schema == ref.schema
-    assert sorted(map(tuple, ours.collect())) == sorted(map(tuple, ref.collect()))
+    assert sorted(map(tuple, got)) == sorted(map(tuple, ref.collect()))
 
     # empty frame: zero partitions, pruned from a union at optimize time
     emp = emp0 = empty_df(spark, schema)
@@ -396,3 +400,66 @@ def test_local_df_one_slice_and_empty_local_relation(spark):
     unioned = emp.unionAll(ref).unionAll(emp0)
     opt = unioned._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" not in opt, opt  # both empty legs pruned
+
+
+def _local_df_ddl_schemas() -> list[str]:
+    """Every DDL string literal the package passes to `local_df`, read
+    from the source so a new call site is covered without a test edit."""
+    import ast
+    import pathlib
+
+    import neumann_spark
+
+    found = set()
+    for path in pathlib.Path(neumann_spark.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Call)
+                    and getattr(node.func, "id", None) == "local_df"
+                    and len(node.args) == 3
+                    and isinstance(node.args[2], ast.Constant)):
+                found.add(node.args[2].value)
+    return sorted(found)
+
+
+def _engine_table_ddl() -> str:
+    """One CREATE TABLE schema holding every type `_lower_type` emits."""
+    from neumann_spark.engine import NeumannSparkEngine
+
+    sql_types = ("INT", "SMALLINT", "DOUBLE", "TEXT", "BOOLEAN", "DATE",
+                 "TIMESTAMP", "BLOB")
+    return ", ".join(f"c{i} {NeumannSparkEngine._lower_type(t)}"
+                     for i, t in enumerate(sql_types))
+
+
+def _sample(dt):
+    import datetime
+
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.ArrayType):
+        return [_sample(dt.elementType), None, _sample(dt.elementType)]
+    return {
+        T.LongType: 2**40 + 3, T.IntegerType: -7, T.DoubleType: 1 / 3,
+        T.FloatType: 0.1, T.StringType: "n\u00e9", T.BooleanType: True,
+        T.DateType: datetime.date(2024, 2, 29),
+        T.TimestampType: datetime.datetime(2024, 2, 29, 12, 34, 56, 789012),
+        T.BinaryType: bytearray(b"\x00\xff"),
+    }[type(dt)]
+
+
+@pytest.mark.parametrize("ddl", _local_df_ddl_schemas() + [_engine_table_ddl()])
+def test_local_df_type_fidelity(spark, ddl):
+    """Arrow-built `local_df` frames equal `spark.createDataFrame(rows,
+    schema)` in schema and values, nulls included, for every schema the
+    package builds them with."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from neumann_spark.session import local_df
+
+    fields = _parse_datatype_string(ddl).fields
+    rows = [tuple(_sample(f.dataType) for f in fields),
+            tuple(None for _ in fields)]
+    ours = local_df(spark, rows, ddl)
+    ref = spark.createDataFrame(rows, ddl)
+    assert ours.schema == ref.schema
+    assert ours.collect() == ref.collect()
