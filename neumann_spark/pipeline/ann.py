@@ -21,8 +21,6 @@ exact brute force (functions.vector.knn) stays the correctness baseline.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -204,44 +202,6 @@ def _sq_dist_expr(vec: Column, centroid: list[float]) -> Column:
     )
 
 
-def ivf_assign_expr(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
-    """Nearest-centroid id as a single expression: array_min over
-    struct(d, cluster) gives the (distance, cluster) lexicographic min —
-    exactly the ROW_NUMBER(ORDER BY d, cluster) tie-break of the oracle.
-    Map-only: broadcast-by-literal k×dim centroids, no shuffle, no explode."""
-    cells = [
-        F.struct(_sq_dist_expr(vec, vals).alias("d"), F.lit(int(cid)).alias("cluster"))
-        for cid, vals in centroids
-    ]
-    return F.array_min(F.array(*cells)).getField("cluster")
-
-
-def ivf_build(emb: DataFrame, k: int = IVF_K, iters: int = IVF_ITERS):
-    """IVF index build: deterministic Lloyd k-means (init = vec_id % k,
-    fixed iterations — `build_ivf_index`, `vector_engine/src/lib.rs:2647`).
-    Returns (state, centroids): state = (vec_id, v, cluster) DataFrame,
-    centroids = [(cluster, [64 floats])] driver-side (k×dim is tiny — the
-    same place MLlib KMeans keeps them).
-
-    Scale shape per iteration: ONE shuffle (groupBy cluster with 64
-    map-side partial AVG columns — no 64× posexplode write amplification),
-    a k-row collect, and a map-only literal-argmin reassignment."""
-    emb_d = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).localCheckpoint(eager=False)
-    state = emb_d.withColumn("cluster", (F.col("vec_id") % k).cast("int"))
-    avgs = [F.avg(F.element_at("v", i)).alias(f"c{i}") for i in range(1, DIM + 1)]
-    centroids: list[tuple[int, list[float]]] = []
-    for _ in range(iters):
-        cent_rows = state.groupBy("cluster").agg(*avgs).collect()
-        centroids = sorted(
-            (int(r["cluster"]), [float(r[f"c{i}"]) for i in range(1, DIM + 1)])
-            for r in cent_rows
-        )
-        state = emb_d.withColumn("cluster", ivf_assign_expr(F.col("v"), centroids))
-    return state, centroids
-
-
 # IVF index cache per (session, sf_dir): build once, reuse across the
 # cluster-stats query, the search query, and repeated searches — the analog
 # of the reference holding its IVF lists in the vector store
@@ -250,15 +210,26 @@ _IVF_CACHE: dict[tuple[int, str], tuple[DataFrame, list]] = {}
 
 
 def ivf_index(spark: SparkSession, sf_dir: str):
+    """IVF index: the single-subspace Lloyd build (`pq_build` with S=1 over
+    the full vector; init = vec_id % k, fixed iterations — `build_ivf_index`,
+    `vector_engine/src/lib.rs:2647`). Returns (state, centroids): state =
+    (vec_id, v, cluster), centroids = [(cluster, [64 floats])] driver-side
+    (k×dim is tiny — the same place MLlib KMeans keeps them)."""
     key = (id(spark), sf_dir)
     if key not in _IVF_CACHE:
-        state, centroids = ivf_build(load(spark, sf_dir, "embeddings"))
-        _IVF_CACHE[key] = (state.localCheckpoint(eager=True), centroids)
+        emb = load(spark, sf_dir, "embeddings")
+        codes, books = pq_build(emb, S=1, subdim=DIM, k=IVF_K, iters=IVF_ITERS)
+        state = emb.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        ).join(codes.select("vec_id", F.col("code_0").alias("cluster")),
+               "vec_id")
+        _IVF_CACHE[key] = (state.localCheckpoint(eager=True), books[0])
     return _IVF_CACHE[key]
 
 
 def _ivf_sql(k: int = IVF_K, iters: int = IVF_ITERS) -> str:
-    """Unrolled Lloyd k-means oracle, mirroring ivf_build exactly."""
+    """Unrolled Lloyd k-means oracle, mirroring `ivf_index`'s S=1
+    `pq_build` exactly."""
     parts = [
         f"""
     WITH a0 AS MATERIALIZED (
@@ -517,91 +488,14 @@ def _adc_term(qs: list[float], codebook: list[tuple[int, list[float]]],
     return F.element_at(F.create_map(*entries), code_col)
 
 
-def pq_build(emb: DataFrame, S: int = PQ_S, subdim: int = PQ_SUBDIM,
-             k: int = PQ_K, iters: int = PQ_ITERS):
-    """All-subspace deterministic Lloyd (same recipe as `ivf_build`).
-    Returns (codes DataFrame (vec_id, code_0..code_{S-1}),
-    codebooks: list over s of [(code, [subdim floats])]).
-
-    One job per iteration: the S per-subspace centroid groupBys share the
-    scan via unionAll and collect together (S x k rows); reassignment is
-    a single map-only select producing all code columns — no per-subspace
-    loop of actions, no S-way join at the end."""
-    emb_d = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).localCheckpoint(eager=False)
-    state = emb_d.select(
-        "vec_id",
-        "v",
-        *[
-            (F.col("vec_id") % k).cast("int").alias(f"code_{s}")
-            for s in range(S)
-        ],
-    )
-    codebooks: list[list[tuple[int, list[float]]]] = []
-    for _ in range(iters):
-        aggs = None
-        for s in range(S):
-            sub = _pq_subvec(F.col("v"), s, subdim)
-            part = (
-                state.groupBy(F.col(f"code_{s}").alias("code"))
-                .agg(
-                    *[
-                        F.avg(F.element_at(sub, i)).alias(f"c{i}")
-                        for i in range(1, subdim + 1)
-                    ]
-                )
-                .withColumn("s", F.lit(s))
-            )
-            aggs = part if aggs is None else aggs.unionAll(part)
-        rows = aggs.collect()
-        codebooks = []
-        for s in range(S):
-            codebooks.append(
-                sorted(
-                    (
-                        int(r["code"]),
-                        [float(r[f"c{i}"]) for i in range(1, subdim + 1)],
-                    )
-                    for r in rows
-                    if r["s"] == s
-                )
-            )
-        assigns = []
-        for s in range(S):
-            sub = _pq_subvec(F.col("v"), s, subdim)
-            assigns.append(
-                F.array_min(
-                    F.array(
-                        *[
-                            F.struct(
-                                _sq_dist_expr(sub, vals).alias("d"),
-                                F.lit(int(cid)).alias("code"),
-                            )
-                            for cid, vals in codebooks[s]
-                        ]
-                    )
-                )
-                .getField("code")
-                .alias(f"code_{s}")
-            )
-        # lazy checkpoint: the next iteration's centroid collect (or the
-        # final codes checkpoint) materializes it — keeps each job's
-        # codegen to ONE iteration's assignment expressions
-        state = emb_d.select("vec_id", "v", *assigns).localCheckpoint(eager=False)
-    codes = state.select(
-        "vec_id", *[f"code_{s}" for s in range(S)]
-    ).localCheckpoint(eager=False)
-    return codes, codebooks
-
-
 _PQ_CACHE: dict[tuple[int, str], tuple[DataFrame, list]] = {}
 
 
 def pq_index(spark: SparkSession, sf_dir: str):
     key = (id(spark), sf_dir)
     if key not in _PQ_CACHE:
-        _PQ_CACHE[key] = pq_build(load(spark, sf_dir, "embeddings"))
+        _PQ_CACHE[key] = pq_build(load(spark, sf_dir, "embeddings"),
+                                  S=PQ_S, subdim=PQ_SUBDIM, k=PQ_K)
     return _PQ_CACHE[key]
 
 
@@ -678,20 +572,27 @@ def _super_probe_expr(vec: Column, supers: list, p: int) -> Column:
     return F.transform(F.slice(arr, 1, p), lambda s: s["sid"])
 
 
-def pq_build_joined(emb: DataFrame, S: int, subdim: int, k: int,
-                    iters: int = PQ_ITERS, two_level: bool | None = None):
-    """Deterministic Lloyd identical in semantics to `pq_build`, but built
-    for LARGE codebooks (S x k in the hundreds+): candidates come from a
-    broadcast join against a (s, code, centroid) frame instead of S*k
-    inlined literal expressions — the literal-argmin plan is O(S*k)
-    expression cells and takes Catalyst a minute to plan at 16x64, while
-    this plan is a constant-size generic expression over an exploded
-    (vec_id, s) long form. One broadcast join + one (vec_id, s) groupBy
-    per iteration; at 100 TB the codebook stays broadcast-size and the
-    groupBy is the same single shuffle the literal form avoids only by
-    being unplannable. Tie-breaks, rounding, and empty-cell handling match
-    `pq_build` (and the SQL oracle) exactly: ROUND(d, 6), lexicographic
-    (d, code) min, codes vanish when their cell empties.
+def pq_build(emb: DataFrame, S: int, subdim: int, k: int,
+             iters: int = PQ_ITERS, two_level: bool | None = None):
+    """The one deterministic Lloyd k-means builder: init = vec_id % k,
+    fixed iterations, run independently in each of S subspaces of
+    `subdim` dims. It trains the IVF lists (`ivf_index`: S=1 over the
+    full vector), the PQ codebooks (`pq_index`, `pq_fine_index`) and the
+    graph index's warm quantizer and traversal PQ. Returns (codes
+    DataFrame (vec_id, code_0..code_{S-1}), codebooks: list over s of
+    [(code, [subdim floats])]).
+
+    Candidates come from a broadcast join against a (s, code, centroid)
+    frame — a constant-size generic expression over an exploded
+    (vec_id, s) long form; one broadcast join + one (vec_id, s) groupBy
+    per iteration, and at 100 TB the codebook stays broadcast-size. The
+    former literal-argmin form (S*k inlined distance expressions) gave
+    bit-identical codes but spent its time planning and generating code
+    for those cells: 12-19 s per 8x8x16 PQ build against 2-5 s here
+    (4-core box, 500 and 2,000 vectors). Tie-breaks, rounding and empty-cell
+    handling match the SQL oracles (`_ivf_sql`, `_pq_lloyd_sql`)
+    exactly: ROUND(d, 6), lexicographic (d, code) min, codes vanish when
+    their cell empties.
 
     `two_level` routes each iteration's assignment through ~√k
     super-centroids (see `_super_split`) — O(N·√k) candidate rows per
@@ -703,19 +604,6 @@ def pq_build_joined(emb: DataFrame, S: int, subdim: int, k: int,
     (k ≤ 64) never route."""
     use_two_level = (two_level if two_level is not None
                      else (S == 1 and k > GRAPH_TWO_LEVEL_MIN_K))
-    # Sub-carry vs re-attach (VERDICT r13 item 3/5): carrying `sub`
-    # through the argmin removes the former subs ⋈ assignment re-attach
-    # join (two exchanges of the N·S sub-vector rows per iteration) but
-    # widens the map-side candidate rows by |sub| bytes each. For narrow
-    # PQ subspaces (subdim ≤ GRAPH_PQ_SUBDIM·4 = 8, ≤ 64 B) the carry is
-    # the unambiguous win; for the WIDE warm quantizer (S=1,
-    # subdim = full dim, 512 B subs) the trade was estimated neutral and
-    # is settled by a measured 262K ladder A/B this round (see
-    # OPTIMIZATION_r14.md — the env knob exists for that A/B and for
-    # re-measurement at other scales).
-    _carry_env = os.environ.get("NEUMANN_PQ_SUB_CARRY")
-    carry_sub = (_carry_env == "1" if _carry_env is not None
-                 else True)
     emb_d = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -735,9 +623,8 @@ def pq_build_joined(emb: DataFrame, S: int, subdim: int, k: int,
     # the assignment frame CARRIES each row's own sub-vector through the
     # argmin (functionally dependent on (vec_id, s), picked up by
     # first()), so the centroid update below consumes (s, code, sub)
-    # directly — the former subs ⋈ codes_long re-attachment join cost two
-    # exchanges of the N·S sub-vector rows per iteration (§2.3/§2.4: the
-    # join existed only to re-attach a column the plan had just dropped)
+    # directly — re-attaching it with a subs ⋈ codes_long join would cost
+    # two exchanges of the N·S sub-vector rows per iteration
     codes_long = subs.select(
         "vec_id", "s", "sub",
         (F.col("vec_id") % k).cast("int").alias("code"))
@@ -787,7 +674,7 @@ def pq_build_joined(emb: DataFrame, S: int, subdim: int, k: int,
             # recall gate bounds end-to-end, exactly like the pair-shard
             # kernel's cross-shard loss. Exhaustive probes (p ≥ #supers)
             # are bit-equal to the flat join — pinned by
-            # test_two_level_assignment_exhaustive_matches_flat.
+            # test_two_level_warm_assignment_exhaustive_matches_flat.
             cent_list = [(code, vals) for _, code, vals in cent_rows]
             supers, member_rows = _super_split(cent_list)
             members = local_df(emb.sparkSession,
@@ -809,28 +696,13 @@ def pq_build_joined(emb: DataFrame, S: int, subdim: int, k: int,
             # (vec_id, s) — never k × sub bytes.
         else:
             cand = subs.join(F.broadcast(cent), "s")
-        if carry_sub:
-            codes_long = (
-                cand.select("vec_id", "s", "sub", d.alias("d"), "code")
-                .groupBy("vec_id", "s")
-                .agg(F.min(F.struct("d", "code")).alias("m"),
-                     F.first("sub").alias("sub"))
-                .select("vec_id", "s", "sub",
-                        F.col("m.code").alias("code"))
-            )
-        else:
-            # re-attach form (the pre-r13 shape, kept behind the env knob
-            # for ladder A/Bs): argmin drops `sub` before the shuffle,
-            # then re-joins subs — two extra exchanges of the N·S
-            # sub-vector rows per iteration, but narrow candidate rows
-            assign = (
-                cand.select("vec_id", "s", d.alias("d"), "code")
-                .groupBy("vec_id", "s")
-                .agg(F.min(F.struct("d", "code")).alias("m"))
-                .select("vec_id", "s", F.col("m.code").alias("code"))
-            )
-            codes_long = subs.join(assign, ["vec_id", "s"]).select(
-                "vec_id", "s", "sub", "code")
+        codes_long = (
+            cand.select("vec_id", "s", "sub", d.alias("d"), "code")
+            .groupBy("vec_id", "s")
+            .agg(F.min(F.struct("d", "code")).alias("m"),
+                 F.first("sub").alias("sub"))
+            .select("vec_id", "s", "sub", F.col("m.code").alias("code"))
+        )
     codebooks: list[list[tuple[int, list[float]]]] = [
         [(code, vals) for rs, code, vals in cent_rows if rs == s]
         for s in range(S)
@@ -848,7 +720,7 @@ def pq_build_joined(emb: DataFrame, S: int, subdim: int, k: int,
 def pq_fine_index(spark: SparkSession, sf_dir: str):
     key = (id(spark), sf_dir)
     if key not in _PQ_FINE_CACHE:
-        _PQ_FINE_CACHE[key] = pq_build_joined(
+        _PQ_FINE_CACHE[key] = pq_build(
             load(spark, sf_dir, "embeddings"),
             S=PQ_FINE_S, subdim=PQ_FINE_SUBDIM, k=PQ_FINE_K)
     return _PQ_FINE_CACHE[key]
@@ -2243,24 +2115,6 @@ def _nnd_round(u: DataFrame, nn: DataFrame,
     return _top_m_edges_dedup(non.union(cur), est_pairs=est_pairs)
 
 
-def _exact_forward_edges(u: DataFrame) -> DataFrame:
-    """All-pairs exact top-M forward edges — O(N^2), TEST-ONLY: the
-    differential baseline `test_nnd_build_vs_exact` checks the NN-descent
-    build against. Never called by a registered query."""
-    from neumann_spark.functions.vector import dot_expr
-
-    ua = u.select(F.col("vec_id").alias("src"), F.col("embedding").alias("va"))
-    ub = u.select(F.col("vec_id").alias("dst"), F.col("embedding").alias("vb"))
-    pairs = (
-        ua.join(F.broadcast(ub), F.col("src") != F.col("dst"))
-        .select(
-            "src", "dst",
-            F.round(1.0 - dot_expr(F.col("va"), F.col("vb")), 6).alias("d"),
-        )
-    )
-    return _top_m_edges(pairs)
-
-
 def knn_graph_index(spark: SparkSession, sf_dir: str):
     """Build (once per session+sf_dir) the graph-search index over unit
     vectors: kNN edges, warm-start clusters, and the traversal PQ.
@@ -2279,9 +2133,9 @@ def knn_graph_index(spark: SparkSession, sf_dir: str):
     Scale shape: seeded NN-descent (`_nnd_forward_edges`) — cluster-blocked
     candidate equi-joins refined per round, O(N * (2M)^2) pair rows per
     round, never the N^2 product the r1-r7 build paid. The search contract
-    (src, pos, dst) is unchanged. Lloyd builds reuse `pq_build_joined`
-    (broadcast-join form): the warm quantizer is just S=1 x subdim=64,
-    k=45."""
+    (src, pos, dst) is unchanged. Both Lloyd builds are `pq_build`, the
+    package's one k-means builder: the warm quantizer is just
+    S=1 x subdim=64, k=45."""
     key = (id(spark), sf_dir)
     if key in _KNN_GRAPH_CACHE:
         return _KNN_GRAPH_CACHE[key]
@@ -2331,7 +2185,7 @@ def _build_graph_index(spark: SparkSession, emb: DataFrame) -> tuple:
         spark.conf.set(conf_key, str(GRAPH_BUILD_ADVISORY_BYTES))
     try:
         warm_k = graph_auto_warm_k(n)
-        warm_codes_w, warm_books = pq_build_joined(
+        warm_codes_w, warm_books = pq_build(
             u, S=1, subdim=DIM, k=warm_k, iters=GRAPH_WARM_ITERS)
         warm_codes = warm_codes_w.select(
             "vec_id", F.col("code_0").alias("cluster"))
@@ -2350,7 +2204,7 @@ def _build_graph_index(spark: SparkSession, emb: DataFrame) -> tuple:
             else:
                 spark.conf.unset(conf_key)
 
-    codes_w, codebooks = pq_build_joined(
+    codes_w, codebooks = pq_build(
         u, S=GRAPH_PQ_S, subdim=GRAPH_PQ_SUBDIM, k=GRAPH_PQ_K, iters=PQ_ITERS)
     melt = F.explode(F.array(*[
         F.struct(F.lit(s).alias("s"), F.col(f"code_{s}").alias("code"))
@@ -2414,9 +2268,9 @@ def _build_graph_index(spark: SparkSession, emb: DataFrame) -> tuple:
             "shard_dropped_est": int(shard_tel.get("pair_dropped_est", 0)),
             "validated": {}}
     # warm_codes is a narrow 2-column select over codes_w, which
-    # pq_build_joined already checkpointed eagerly — re-checkpointing the
-    # projection would copy the blocks and pay one more job per build for
-    # nothing (guide §5)
+    # pq_build already checkpoints (lazily: the seed stage's first action
+    # materializes it) — re-checkpointing the projection would copy the
+    # blocks and pay one more job per build for nothing (guide §5)
     return (edges, warm_codes, warm_centroids,
             codes_long, codebooks, u, sq_codes, sq_lo, sq_hi, meta)
 

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import functools
 import os
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -17,6 +19,18 @@ def jobs_run(spark, action):
     before = sched.nextJobId()
     out = action()
     return out, sched.nextJobId() - before
+
+
+@functools.cache
+def load_selfcheck():
+    """`tools/selfcheck.py` as a module (tools/ is not a package)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "selfcheck_mod", os.path.join(REPO_ROOT, "tools", "selfcheck.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 @pytest.fixture(scope="session")

@@ -34,15 +34,9 @@ def test_selfcheck_oracle_type_audit_flags_uncast_sum():
     """The selfcheck typing audit must flag a bare integer SUM (DuckDB
     widens it to HUGEINT — the bug class behind three rounds of red driver
     rows) and pass the CAST form."""
-    import importlib.util
+    from tests.conftest import SF_DIR, load_selfcheck
 
-    from tests.conftest import SF_DIR
-
-    spec = importlib.util.spec_from_file_location(
-        "selfcheck_mod", "/root/repo/tools/selfcheck.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_selfcheck()
     con = mod.make_duck(SF_DIR)
     bad = mod.audit_oracle_types(
         con,
@@ -55,3 +49,57 @@ def test_selfcheck_oracle_type_audit_flags_uncast_sum():
     assert "injected_bad" in bad and "HUGEINT" in bad["injected_bad"][0]
     assert "cast_ok" not in bad
     assert "broken_sql" in bad  # unplannable oracle is also a failure
+
+
+def test_tool_imports_resolve():
+    """Every `from neumann_spark… import name` and every attribute read off
+    a package-module alias (`ann.<name>`) in tools/*.py and bench.py must
+    resolve against the package. Read by AST: the tools import lazily
+    inside functions, so importing them would not catch a removed name."""
+    import ast
+    import glob
+    import importlib
+    import os
+
+    from tests.conftest import REPO_ROOT
+
+    def is_module(name: str) -> bool:
+        try:
+            importlib.import_module(name)
+            return True
+        except ModuleNotFoundError:
+            return False
+
+    paths = sorted(glob.glob(os.path.join(REPO_ROOT, "tools", "*.py")))
+    paths.append(os.path.join(REPO_ROOT, "bench.py"))
+    missing, checked = [], set()
+    for path in paths:
+        rel = os.path.relpath(path, REPO_ROOT)
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        aliases: dict[str, str] = {}  # local name -> package module
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                aliases.update((a.asname, a.name) for a in node.names
+                               if a.asname and a.name.startswith("neumann_spark"))
+            elif (isinstance(node, ast.ImportFrom)
+                  and (node.module or "").startswith("neumann_spark")):
+                mod = importlib.import_module(node.module)
+                for a in node.names:
+                    checked.add((rel, node.module, a.name))
+                    sub = f"{node.module}.{a.name}"
+                    if is_module(sub):
+                        aliases[a.asname or a.name] = sub
+                    elif not hasattr(mod, a.name):
+                        missing.append(f"{rel}: from {node.module} import {a.name}")
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id in aliases):
+                mod_name = aliases[node.value.id]
+                checked.add((rel, mod_name, node.attr))
+                if not hasattr(importlib.import_module(mod_name), node.attr):
+                    missing.append(f"{rel}: {node.value.id}.{node.attr}")
+    assert not missing, missing
+    # the guard must actually see the ANN tools' attribute reads
+    assert sum(m == "neumann_spark.pipeline.ann" for _, m, _ in checked) > 20

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -152,6 +153,25 @@ def test_persisted_fine_index_serves_low_scan(spark, tmp_path):
     assert sorted(map(key, loaded)) == sorted(map(key, session))
 
 
+def _exact_forward_edges(u):
+    """All-pairs exact top-M forward edges — O(N^2): the differential
+    baseline `test_nnd_build_vs_exact` checks the NN-descent build
+    against."""
+    from neumann_spark.functions.vector import dot_expr
+    from neumann_spark.pipeline.ann import _top_m_edges
+
+    ua = u.select(F.col("vec_id").alias("src"), F.col("embedding").alias("va"))
+    ub = u.select(F.col("vec_id").alias("dst"), F.col("embedding").alias("vb"))
+    pairs = (
+        ua.join(F.broadcast(ub), F.col("src") != F.col("dst"))
+        .select(
+            "src", "dst",
+            F.round(1.0 - dot_expr(F.col("va"), F.col("vb")), 6).alias("d"),
+        )
+    )
+    return _top_m_edges(pairs)
+
+
 def test_nnd_build_vs_exact(spark):
     """Differential for the NN-descent kNN-graph build (the r8
     replacement for the all-pairs join): forward edges recover >=90% of
@@ -166,7 +186,6 @@ def test_nnd_build_vs_exact(spark):
     from neumann_spark.pipeline.ann import (
         GRAPH_M,
         GRAPH_R,
-        _exact_forward_edges,
         knn_graph_index,
         unit_embeddings,
     )
@@ -1426,11 +1445,11 @@ def test_two_level_warm_assignment_exhaustive_matches_flat(
     from tests.conftest import SF_DIR
 
     u = ann.unit_embeddings(load(spark, SF_DIR, "embeddings"))
-    flat, flat_books = ann.pq_build_joined(
+    flat, flat_books = ann.pq_build(
         u, S=1, subdim=ann.DIM, k=ann.GRAPH_WARM_K,
         iters=ann.GRAPH_WARM_ITERS, two_level=False)
     monkeypatch.setattr(ann, "GRAPH_SUPER_PROBES", 10_000)  # ≥ #supers
-    two, two_books = ann.pq_build_joined(
+    two, two_books = ann.pq_build(
         u, S=1, subdim=ann.DIM, k=ann.GRAPH_WARM_K,
         iters=ann.GRAPH_WARM_ITERS, two_level=True)
     assert two_books == flat_books
@@ -1451,10 +1470,10 @@ def test_two_level_warm_assignment_default_probes(spark):
     from tests.conftest import SF_DIR
 
     u = ann.unit_embeddings(load(spark, SF_DIR, "embeddings"))
-    flat, _ = ann.pq_build_joined(
+    flat, _ = ann.pq_build(
         u, S=1, subdim=ann.DIM, k=ann.GRAPH_WARM_K,
         iters=ann.GRAPH_WARM_ITERS, two_level=False)
-    two, _ = ann.pq_build_joined(
+    two, _ = ann.pq_build(
         u, S=1, subdim=ann.DIM, k=ann.GRAPH_WARM_K,
         iters=ann.GRAPH_WARM_ITERS, two_level=True)
     f = {r["vec_id"]: r["code_0"] for r in flat.collect()}
@@ -1636,3 +1655,55 @@ def test_serve_literal_lut_matches_join_form(spark):
         .groupBy("vec_id").agg(F.round(F.sum("d"), 6).alias("d")).collect()
     }
     assert joined == literal and len(literal) == len(ids)
+
+
+def test_lloyd_build_partition_invariant(spark):
+    """`pq_build` — the one Lloyd builder — must give the same codes and
+    codebooks whatever the shuffle-partition count or AQE setting, at all
+    three index shapes it serves: IVF (1x64x8, 3 iterations), coarse PQ
+    (8x8x16) and fine PQ (16x4x64)."""
+    import neumann_spark.pipeline.ann as ann
+    from neumann_spark.catalog import load
+    from tests.conftest import SF_DIR
+
+    emb = load(spark, SF_DIR, "embeddings")
+    shapes = [
+        (1, ann.DIM, ann.IVF_K, ann.IVF_ITERS),
+        (ann.PQ_S, ann.PQ_SUBDIM, ann.PQ_K, ann.PQ_ITERS),
+        (ann.PQ_FINE_S, ann.PQ_FINE_SUBDIM, ann.PQ_FINE_K, ann.PQ_ITERS),
+    ]
+
+    def build(S, subdim, k, iters):
+        codes, books = ann.pq_build(emb, S=S, subdim=subdim, k=k, iters=iters)
+        return sorted(tuple(r) for r in codes.collect()), books
+
+    ref = {shape: build(*shape) for shape in shapes}
+    assert all(len(codes) == emb.count() for codes, _ in ref.values())
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prior = {key: spark.conf.get(key) for key in keys}
+    try:
+        for parts in ("1", "200"):
+            for aqe in ("true", "false"):
+                spark.conf.set(keys[0], parts)
+                spark.conf.set(keys[1], aqe)
+                for shape in shapes:
+                    assert build(*shape) == ref[shape], (shape, parts, aqe)
+    finally:
+        for key, val in prior.items():
+            spark.conf.set(key, val)
+
+
+@pytest.mark.parametrize("name", [
+    "ann_ivf_clusters", "ann_ivf_search", "ann_pq_search",
+    "ann_ivfpq_search", "ann_ivfpq_rescore", "dedup_semantic_semdedup",
+])
+def test_lloyd_queries_match_oracle(spark, duck, name):
+    """The queries that read a Lloyd-built index hash-match their DuckDB
+    oracles (the unrolled SQL Lloyd loops), as `tools/selfcheck.py` checks
+    them."""
+    from neumann_spark.registry import all_oracles, all_queries
+    from tests.conftest import SF_DIR, load_selfcheck
+
+    res = load_selfcheck().compare_one(
+        name, all_queries()[name], all_oracles()[name], spark, duck, SF_DIR)
+    assert res["status"] == "ok", res
