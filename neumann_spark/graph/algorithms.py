@@ -56,36 +56,34 @@ def pagerank(
     """PageRank (`graph_engine/src/lib.rs:6943`; config damping/max_iter).
 
     Data-flow form: one shuffle per iteration (contributions grouped by dst).
-    Edges+outdeg are cached; pr is localCheckpointed per round. At 100 TB:
-    partition edges by src so the contribution join is co-located, and use
-    `spark.sql.adaptive` to coalesce the small pr side automatically."""
+    Each node also messages itself over a self-loop of degree +inf, whose
+    share `pr / deg` is exactly 0.0 and leaves every sum unchanged, so `pr`
+    comes straight from the groupBy and a node without in-edges gets
+    exactly `base`, as in the oracle's COALESCE. At 100 TB: partition edges
+    by src so the contribution join is co-located, and use
+    `spark.sql.adaptive` to coalesce the small pr side."""
     n_total = nodes.count()
+    ids = nodes.select("id")
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    e = edges.select("src", "dst").join(outdeg, "src").localCheckpoint(eager=False)
-    nodes_c = nodes.select("id").localCheckpoint(eager=False)
-    # nodes with no in-edges keep pr = base every round — a STATIC set, so
-    # the per-round "restore missing nodes" left join (a third shuffle per
-    # iteration) is replaced by a shuffle-free union with this frame
-    no_in = nodes_c.join(
-        e.select(F.col("dst").alias("id")).distinct(), "id", "left_anti"
-    ).localCheckpoint(eager=False)
-    pr = nodes_c.select("id", F.lit(1.0 / n_total).alias("pr"))
+    # under AQE, localCheckpoint(eager=False) still runs every upstream
+    # shuffle stage as a job when called (a warm call of this function runs
+    # 16 jobs at sf0.001 for its one explicit count())
+    e = (
+        edges.select("src", "dst").join(outdeg, "src")
+        .unionAll(ids.select("id", "id", F.lit(float("inf"))))  # self-loops
+        .localCheckpoint(eager=False)
+    )
+    pr = ids.select("id", F.lit(1.0 / n_total).alias("pr"))
     base = (1.0 - damping) / n_total
     for it in range(iters):
-        contrib = (
+        pr = (
             e.join(pr, e.src == pr.id)
-            .select(F.col("dst"), (F.col("pr") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
+            .groupBy(F.col("dst").alias("id"))
+            .agg((F.lit(base) + F.lit(damping) * F.sum(F.col("pr") / F.col("deg"))).alias("pr"))
         )
-        pr = contrib.select(
-            F.col("dst").alias("id"),
-            (F.lit(base) + F.lit(damping) * F.col("contrib")).alias("pr"),
-        ).unionAll(no_in.select("id", F.lit(float(base)).alias("pr")))
-        # pr feeds exactly ONE consumer per round, so the lazy plan grows
-        # linearly — the whole power iteration compiles to a single job with
-        # chained shuffles. A mid-loop checkpoint every 6 rounds caps
-        # optimizer time on very long runs without a job per round.
+        # pr feeds one consumer per round, so the lazy plan grows linearly
+        # (AQE still runs each round's shuffle as its own job). A checkpoint
+        # every 6 rounds caps optimizer time on very long runs.
         if it % 6 == 5:
             pr = pr.localCheckpoint(eager=False)
     return pr
@@ -133,19 +131,24 @@ def connected_components(
     """Connected components (`graph_engine/src/lib.rs:6898`) by iterative
     min-id propagation; `rounds` must exceed the graph diameter (asserted by
     convergence tests). Scale path: GraphFrames/GraphX use the same HCC idea
-    with large-star/small-star acceleration; one shuffle per round here."""
-    e = uedges.select("src", "dst").localCheckpoint(eager=False)
-    comp = nodes.select("id", F.col("id").alias("comp"))
+    with large-star/small-star acceleration; one shuffle per round here.
+    The message edges carry one self-loop per node, so a round's label is
+    one min over the node and its neighbours in `nodes` — the oracle's
+    `LEAST(comp, COALESCE(min neighbour, comp))`."""
+    ids = nodes.select("id")
+    e = (
+        uedges.select("src", "dst")
+        .join(ids.withColumnRenamed("id", "src"), "src", "left_semi")
+        .unionAll(ids.select("id", "id"))  # self-loops
+        .localCheckpoint(eager=False)
+    )
+    comp = ids.select("id", F.col("id").alias("comp"))
     prev_sig = None
     for rnd in range(rounds):
-        nb_min = (
+        comp = (
             e.join(comp, e.dst == comp.id)
-            .groupBy("src")
-            .agg(F.min("comp").alias("nb_comp"))
-        )
-        comp = comp.join(nb_min, comp.id == nb_min.src, "left").select(
-            "id",
-            F.least(F.col("comp"), F.coalesce("nb_comp", F.col("comp"))).alias("comp"),
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.min("comp").alias("comp"))
         )
         if rnd % 3 == 2 or rnd == rounds - 1:
             comp = comp.localCheckpoint(eager=False)

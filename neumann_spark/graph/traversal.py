@@ -34,36 +34,28 @@ def bfs_levels(
     `graph_engine/src/lib.rs:4674,4794`).
 
     `sources` must have columns (source, node). Each level: frontier ⋈ edges
-    → anti-join against visited → new frontier. Frontier and visited are
-    localCheckpointed per level so the plan stays flat."""
+    → anti-join against visited → new frontier. Each new level is
+    localCheckpointed, so the next level's join and the visited union read
+    it once instead of recomputing it, and an empty level ends the walk."""
     visited = sources.select(src_col, "node", F.lit(0).alias("dist"))
     frontier = visited
-    # shallow traversals (≤4 hops) run fully lazy — one job total; the
-    # frontier is referenced twice per level so plan size is 2^depth, which
-    # only matters for deep walks, where we checkpoint per level instead.
-    deep = max_depth > 4
     e = edges.select("src", "dst")
-    if deep:
-        e = e.localCheckpoint(eager=False)
+    # shallow walks (≤4 hops) broadcast the frontier and visited sides: the
+    # expansion join and the anti-join become map-side over the edge table,
+    # so the big side never shuffles. A deep frontier can exceed broadcast
+    # limits, so deep walks keep shuffle joins and leave the choice to AQE.
+    hint = F.broadcast if max_depth <= 4 else (lambda df: df)
     for depth in range(1, max_depth + 1):
-        # shallow traversals broadcast the frontier/visited sides: the
-        # expansion join and the anti-join become map-side over the edge
-        # table — the big side never shuffles, which is the whole cost at
-        # 100 TB. Deep walks keep shuffle joins (a deep frontier can exceed
-        # broadcast limits) and rely on AQE's runtime conversion instead.
-        fr = frontier if deep else F.broadcast(frontier)
-        seen = visited.select(src_col, "node")
         nxt = (
-            fr.join(e, frontier.node == e.src)
+            hint(frontier).join(e, frontier.node == e.src)
             .select(src_col, F.col("dst").alias("node"), F.lit(depth).alias("dist"))
             .dropDuplicates([src_col, "node"])
-            .join(seen if deep else F.broadcast(seen), [src_col, "node"], "left_anti")
+            .join(hint(visited.select(src_col, "node")), [src_col, "node"], "left_anti")
+            .localCheckpoint(eager=False)
         )
-        if deep:
-            nxt = nxt.localCheckpoint(eager=False)
         visited = visited.unionAll(nxt)
         frontier = nxt
-        if deep and nxt.isEmpty():  # materializes the lazy checkpoint (one job/level)
+        if nxt.isEmpty():  # materializes the level's checkpoint
             break
     return visited
 

@@ -3,9 +3,10 @@ fixed-iteration oracles."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run, load_selfcheck
 
 
 def _edges(spark, pairs):
@@ -22,6 +23,22 @@ def test_bfs_levels_chain(spark):
     src = spark.createDataFrame([(1, 1)], "source bigint, node bigint")
     out = {r["node"]: r["dist"] for r in bfs_levels(e, src, 10).collect()}
     assert out == {1: 0, 2: 1, 3: 2, 4: 3}
+
+
+def test_bfs_levels_empty_frontier_stops_shallow_walk(spark):
+    """A shallow walk (max_depth ≤ 4) deeper than the source's eccentricity
+    returns the same rows, and stops at the first empty level: depth 4
+    schedules no more jobs than depth 3 on a chain whose far end is 2 hops
+    away."""
+    from neumann_spark.graph.model import undirected_edges
+    from neumann_spark.graph.traversal import bfs_levels
+
+    e = undirected_edges(_edges(spark, [(1, 2), (2, 3)]))
+    src = spark.createDataFrame([(1, 1)], "source bigint, node bigint")
+    rows = {d: jobs_run(spark, lambda: sorted(map(tuple, bfs_levels(e, src, d).collect())))
+            for d in (2, 3, 4)}
+    assert rows[2][0] == rows[3][0] == rows[4][0] == [(1, 1, 0), (1, 2, 1), (1, 3, 2)]
+    assert rows[4][1] == rows[3][1]
 
 
 def test_bounded_dijkstra_picks_cheaper_path(spark):
@@ -44,6 +61,18 @@ def test_connected_components_two_islands(spark):
     comp = {r["id"]: r["comp"] for r in connected_components(nodes, e, 5).collect()}
     assert comp[1] == comp[2] == comp[3] == 1
     assert comp[10] == comp[11] == 10
+
+
+def test_connected_components_isolated_and_dangling(spark):
+    """An isolated node keeps its own id, and an edge to an id missing from
+    `nodes` neither adds a row nor lends its (smaller) id as a label."""
+    from neumann_spark.graph.algorithms import connected_components
+    from neumann_spark.graph.model import undirected_edges
+
+    nodes = spark.createDataFrame([(i,) for i in [1, 2, 3, 7]], "id bigint")
+    e = undirected_edges(_edges(spark, [(1, 2), (2, 3), (0, 3)]))
+    got = sorted(map(tuple, connected_components(nodes, e, 5).collect()))
+    assert got == [(1, 1), (2, 1), (3, 1), (7, 7)]
 
 
 def test_cc_rounds_converged_on_fixture(spark):
@@ -85,6 +114,76 @@ def test_pagerank_mass_conserved(spark):
         1 for k in by_id if k < 1_000_000
     )
     assert top_nation > 10 * avg_cust
+
+
+def test_pagerank_matches_recurrence(spark):
+    """On a 4-node graph, `pagerank` equals a pure-Python run of the
+    oracle's recurrence pr_t(n) = (1-d)/N + d * Σ_{(s,n)} pr_{t-1}(s)/outdeg(s)
+    to 1e-12, and node 4 (no in-edges) gets exactly (1-d)/N."""
+    from neumann_spark.graph.algorithms import DAMPING, pagerank
+
+    pairs = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 1), (4, 3)]
+    ids = [1, 2, 3, 4]
+    nodes = spark.createDataFrame([(i,) for i in ids], "id bigint")
+    got = {r["id"]: r["pr"] for r in pagerank(nodes, _edges(spark, pairs), iters=7).collect()}
+    outdeg = {i: sum(1 for s, _ in pairs if s == i) for i in ids}
+    pr = {i: 1.0 / len(ids) for i in ids}
+    for _ in range(7):
+        pr = {n: (1 - DAMPING) / len(ids)
+              + DAMPING * sum(pr[s] / outdeg[s] for s, d in pairs if d == n)
+              for n in ids}
+    assert got.keys() == pr.keys()
+    assert all(abs(got[i] - pr[i]) <= 1e-12 for i in ids), (got, pr)
+    assert got[4] == (1 - DAMPING) / len(ids)
+
+
+def test_graph_loop_job_budget(spark):
+    """Each BFS level and CC round reads its state once: warm runs at
+    sf0.001 stay within 16 jobs (BFS, depth 3) and 36 jobs (CC, 12 rounds
+    with a fixpoint check every 3)."""
+    from neumann_spark.registry import all_queries
+
+    for name, budget in [("graph_bfs_levels", 16), ("graph_connected_components", 36)]:
+        fn = all_queries()[name]
+        fn(spark, SF_DIR).collect()  # warm the session graph and caches
+        _, jobs = jobs_run(spark, lambda: fn(spark, SF_DIR).collect())
+        assert jobs <= budget, (name, jobs)
+
+
+def _oracle_check(spark, duck, name):
+    from neumann_spark.registry import all_oracles, all_queries
+
+    res = load_selfcheck().compare_one(
+        name, all_queries()[name], all_oracles()[name], spark, duck, SF_DIR)
+    assert res["status"] == "ok", res
+
+
+@pytest.mark.parametrize("name", [
+    "graph_bfs_levels", "graph_pagerank", "graph_connected_components"])
+def test_graph_loops_match_oracle_across_partitions(spark, duck, name):
+    """The headline graph loops hash-match their oracles whatever the
+    shuffle-partition count or AQE setting (PageRank's double `F.sum` is
+    where partition order could leak into the rounded result)."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prior = {key: spark.conf.get(key) for key in keys}
+    try:
+        for parts in ("1", "200"):
+            for aqe in ("true", "false"):
+                spark.conf.set(keys[0], parts)
+                spark.conf.set(keys[1], aqe)
+                _oracle_check(spark, duck, name)
+    finally:
+        for key, val in prior.items():
+            spark.conf.set(key, val)
+
+
+@pytest.mark.parametrize("name", [
+    "graph_closeness_sampled", "unified_similar_connected", "hybrid_rrf_connected",
+    "graph_bridges_distributed", "graph_articulation_distributed"])
+def test_graph_loop_callers_match_oracle(spark, duck, name):
+    """The other queries built on `bfs_levels` or `connected_components`
+    hash-match their oracles."""
+    _oracle_check(spark, duck, name)
 
 
 def test_triangle_count_known(spark):

@@ -3,11 +3,14 @@
 Single bench runs on this box swing ±20-50% with machine state (documented
 in BENCH notes since r4), so round-over-round comparisons from one-shot
 numbers routinely read as phantom regressions (r5's driver number did).
-This tool is the repo's answer: it checks the base ref out into a
-throwaway worktree, runs `python bench.py` ALTERNATELY (A, B, A, B, ...)
-in the same session so both sides sample the same machine state, keeps the
-per-query MINIMUM across runs (the least-noise estimator for a
-throughput-bound suite), and writes BENCH_AB.json with per-query deltas.
+This tool is the repo's answer: it exports the base ref into a
+throwaway directory (`git archive` under $TMPDIR), runs `python bench.py`
+ALTERNATELY (A, B, A, B, ...) in the same session so both sides sample
+the same machine state, keeps the per-query MINIMUM across runs (the
+least-noise estimator for a throughput-bound suite), and writes
+BENCH_AB.json with per-query deltas. The HEAD side is the working tree;
+its recorded ref gets a `+worktree` suffix when tracked files differ
+from HEAD.
 
 Usage: python tools/bench_ab.py [base_ref] [runs_per_side]
   base_ref defaults to the most recent driver round-commit
@@ -21,8 +24,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -50,10 +55,12 @@ def main() -> int:
         print("no base ref found", file=sys.stderr)
         return 1
     head = _run(["git", "rev-parse", "HEAD"]).strip()
-    wt = f"/tmp/neumann_ab_{base_ref[:12]}"
-    _run(["git", "worktree", "remove", "--force", wt], check=False)
-    _run(["git", "worktree", "add", "--detach", wt, base_ref])
+    if _run(["git", "status", "--porcelain", "--untracked-files=no"]).strip():
+        head += "+worktree"  # HEAD side runs the uncommitted working tree
+    wt = tempfile.mkdtemp(prefix=f"neumann_ab_{base_ref[:12]}_")
     try:
+        subprocess.run(f"git archive {base_ref} | tar -x -C {wt}", shell=True,
+                       cwd=REPO, check=True)
         head_runs, base_runs = [], []
         for i in range(runs):
             print(f"run {i + 1}/{runs}: HEAD ...", file=sys.stderr, flush=True)
@@ -61,7 +68,7 @@ def main() -> int:
             print(f"run {i + 1}/{runs}: base ...", file=sys.stderr, flush=True)
             base_runs.append(_bench_once(wt))
     finally:
-        _run(["git", "worktree", "remove", "--force", wt], check=False)
+        shutil.rmtree(wt, ignore_errors=True)
 
     def layout_series(r: dict, kind: str) -> dict:
         """Extract one LAYOUT-CONSISTENT series from a bench JSON. Since
