@@ -1150,6 +1150,20 @@ def _ivfpq_rescore_sql(nprobe: int = ANN_RESCORE_NPROBE,
     return "".join(parts)
 
 
+def _nearest_ids(q: list, centroids: list, p: int) -> list[int]:
+    """Ids of the p centroids nearest q by (round6 squared L2, id),
+    ranked on the driver: a sequential Python sum is bit-identical to the
+    JVM fold of `_sq_dist_expr`, so the probes match the oracle's."""
+    def d2(vals: list) -> float:
+        acc = 0.0
+        for x, c in zip(q, vals):
+            acc += (x - c) * (x - c)
+        return round(acc, 6)
+
+    return [cid for _, cid in sorted(
+        (d2(vals), int(cid)) for cid, vals in centroids)[:p]]
+
+
 def _ivfpq_rescore_search(
     emb: DataFrame, assign: DataFrame, centroids: list,
     codes: DataFrame, codebooks: list,
@@ -1168,23 +1182,11 @@ def _ivfpq_rescore_search(
         for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
     ]
     # probe selection runs driver-side over the k-row centroid list (the
-    # same place the builder keeps it): a sequential Python sum is
-    # bit-identical to the JVM fold of `_sq_dist_expr`, and the result is
-    # a STATIC IN-list filter — on a cluster-partitioned index layout
+    # same place the builder keeps it), and the result is a STATIC
+    # IN-list filter — on a cluster-partitioned index layout
     # (save_ann_index) this prunes unprobed list files at the source,
     # where a joined probes frame would read everything
-    def _d2(vals: list) -> float:
-        acc = 0.0
-        for x, c in zip(qv, vals):
-            acc += (x - c) * (x - c)
-        return round(acc, 6)
-
-    probe_ids = [
-        cid
-        for _, cid in sorted((_d2(vals), int(cid)) for cid, vals in centroids)[
-            :nprobe
-        ]
-    ]
+    probe_ids = _nearest_ids(qv, centroids, nprobe)
     total = None
     for s in range(S):
         qs = qv[s * subdim : (s + 1) * subdim]
@@ -2275,16 +2277,6 @@ def _build_graph_index(spark: SparkSession, emb: DataFrame) -> tuple:
             codes_long, codebooks, u, sq_codes, sq_lo, sq_hi, meta)
 
 
-def _graph_rescore_search(spark: SparkSession, sf_dir: str, rounds: int,
-                          shortlist: int = GRAPH_SHORTLIST,
-                          sq_rescore: bool = False) -> DataFrame:
-    """Round-synchronous graph search for vec#0's top-10 over the session
-    index caches — see _graph_rescore_from for the search core."""
-    return _graph_rescore_from(
-        spark, sf_dir, knn_graph_index(spark, sf_dir), rounds,
-        shortlist=shortlist, sq_rescore=sq_rescore)
-
-
 # the three serving presets' fixture-scale base knobs:
 # (rounds_base, shortlist_base, sq_rescore)
 GRAPH_PRESETS: dict[str, tuple[int, int, bool]] = {
@@ -2292,6 +2284,21 @@ GRAPH_PRESETS: dict[str, tuple[int, int, bool]] = {
     "high_recall": (GRAPH_T_HIGH, GRAPH_SHORTLIST, False),
     "compact": (GRAPH_T_HIGH, GRAPH_COMPACT_SHORTLIST, True),
 }
+
+
+def _auto_budget(spark: SparkSession, sf_dir: str, index: tuple | None,
+                 preset: str) -> tuple[tuple, int, dict]:
+    """(index, rounds, search kwargs) for `preset` at the index's stored
+    cardinality (`graph_auto_budget`) — the one budget derivation both
+    auto entry points serve with. None resolves the session index."""
+    index = index if index is not None else knn_graph_index(spark, sf_dir)
+    rounds_base, shortlist_base, sq = GRAPH_PRESETS[preset]
+    meta = index[9] if len(index) > 9 else None
+    n = meta["n"] if meta else index[6].count()
+    rounds, beam, c, shortlist = graph_auto_budget(
+        n, rounds_base, GRAPH_B, shortlist_base, caps=_meta_caps(meta))
+    return index, rounds, {"shortlist": shortlist, "sq_rescore": sq,
+                           "beam": beam, "c": c}
 
 
 def graph_auto_search(spark: SparkSession, sf_dir: str,
@@ -2310,15 +2317,8 @@ def graph_auto_search(spark: SparkSession, sf_dir: str,
     corpus rewrite at the same sf_dir needs a fresh load_graph_index
     (see its staleness contract). kw passes through to
     `_graph_rescore_from` (anchor, k, allowed)."""
-    index = index if index is not None else knn_graph_index(spark, sf_dir)
-    rounds_base, shortlist_base, sq = GRAPH_PRESETS[preset]
-    meta = index[9] if len(index) > 9 else None
-    n = meta["n"] if meta else index[6].count()
-    rounds, beam, c, shortlist = graph_auto_budget(
-        n, rounds_base, GRAPH_B, shortlist_base, caps=_meta_caps(meta))
-    return _graph_rescore_from(
-        spark, sf_dir, index, rounds, shortlist=shortlist, sq_rescore=sq,
-        beam=beam, c=c, **kw)
+    index, rounds, budget = _auto_budget(spark, sf_dir, index, preset)
+    return _graph_rescore_from(spark, sf_dir, index, rounds, **budget, **kw)
 
 
 def _meta_caps(meta: dict | None) -> tuple[int, int] | None:
@@ -2337,248 +2337,30 @@ def _graph_rescore_from(spark: SparkSession, sf_dir: str, index: tuple,
                         allowed: DataFrame | None = None,
                         beam: int = GRAPH_B, anchor: int = 0,
                         k: int = PQ_TOPK, c: int = GRAPH_C) -> DataFrame:
-    """Round-synchronous graph search core: warm-start with the
-    GRAPH_WARM_PROBES nearest Lloyd lists, then `rounds` bulk rounds —
-    frontier = ADC-top-B unexpanded (a STATIC B-int IN-list selected
-    from the driver-held evaluated map: on a block-partitioned edge
-    layout the literal filter prunes unprobed edge files at the source,
-    where a joined frontier frame would read everything), expand their
-    top-C edges, ADC-rank the new candidates via the literal (s, code, d)
-    lookup array — then exact-cosine rescore of the ADC-top-SHORTLIST.
-    The evaluated set is bounded (warm + beam*C*T rows for one query) so
-    it lives on the driver; every Spark action is a single bounded job
-    over partition-pruned edge and code tables at 100 TB; nothing
-    sequential but the T-round driver loop, mirroring Pregel-style
-    iteration. `rounds` and `beam` are the budget knobs a larger corpus
-    raises (the HNSW ef analog): the fixture presets hold at N=2K; the
-    measured N=20K operating points are in ANN_RECALL.json scale_runs
-    with the restoring (rounds, beam) settings."""
-    edges, warm_codes, warm_centroids, codes_long, codebooks = index[:5]
-    # load_graph_index persists everything EXCEPT the float unit frame;
-    # that path re-derives it from sf_dir, which is only sound when the
-    # index covers ids present there — guarded below at the exact-rescore
-    # join (a grown index holds ids sf_dir lacks; a shrunk one must not
-    # let sf_dir rows outside the index reach the rescore)
-    from_disk = not (len(index) > 5 and index[5] is not None)
-    # From disk the unit frame stays LAZY (r14, §5/§6): the former
-    # per-call localCheckpoint materialized the ENTIRE normalized corpus
-    # into the block store before the anchor head() — 20.9 s/query
-    # measured at 1M — while the call reads it at most thrice (anchor
-    # row, once-per-(index,sf_dir) validation, exact-rescore join). Lazy,
-    # the anchor predicate pushes below the normalize projection to the
-    # parquet scan (row-group pruning on vec_id), and the rescore join
-    # scans the corpus once at collect time — the same single
-    # scan+normalize the checkpoint paid, minus the block-store write.
-    # Values are bit-identical: the normalize expression is unchanged,
-    # only when/where it executes moves.
-    u = (index[5] if not from_disk else
-         unit_embeddings(load(spark, sf_dir, "embeddings")))
-    qv = [float(x) for x in u.filter(
-        F.col("vec_id") == anchor).select("embedding").head()[0]]
-
-    if from_disk and not sq_rescore and len(index) > 6:
-        # disk-loaded index + exact rescore: the re-derived unit frame is
-        # the sf_dir corpus, not the indexed set. The persisted SQ code
-        # table IS the covered id set — refuse if the index holds ids the
-        # corpus lacks (a grown index: their floats are unavailable, the
-        # rescore join would silently drop them), and refuse if covered
-        # rows' VALUES changed under the index (the XOR fingerprint over
-        # round-6 unit values persisted at build — membership alone
-        # cannot see an UPDATEd embedding, whose traversal/ADC used the
-        # persisted codes while the rescore would use the new floats).
-        # Runs BEFORE the traversal so an invalid (index, corpus) pair is
-        # refused in two bounded jobs, not after T rounds of search; and
-        # ONCE per (index, sf_dir) via the meta cache — never one
-        # corpus-scale action per search. Shrunk indexes stay valid: the
-        # fingerprint compares over the covered subset only (short_df
-        # derives from index structures, so extra corpus rows are inert).
-        meta = index[9] if len(index) > 9 else None
-        cache = meta.get("validated") if isinstance(meta, dict) else None
-        if cache is None or sf_dir not in cache:
-            covered = index[6].select("vec_id")
-            n_missing = covered.join(
-                u.select("vec_id"), "vec_id", "left_anti").count()
-            if n_missing:
-                raise ValueError(
-                    f"loaded graph index covers {n_missing} vec_ids "
-                    f"absent from {sf_dir} embeddings; exact rescore "
-                    "needs their float vectors — search with "
-                    "sq_rescore=True (the self-contained SQ8 tier) or "
-                    "persist the grown corpus")
-            if isinstance(meta, dict) and meta.get("fp") is not None:
-                _, corpus_fp = _fp_agg(u.join(covered, "vec_id", "semi"))
-                if (corpus_fp or 0) != meta["fp"]:
-                    raise ValueError(
-                        f"{sf_dir} embeddings changed under the loaded "
-                        "graph index (corpus fingerprint mismatch): "
-                        "traversal/ADC would use stale persisted codes "
-                        "while the exact rescore reads the new floats — "
-                        "rebuild or maintain the index through "
-                        "knn_graph_insert/delete")
-            if cache is not None:
-                cache[sf_dir] = True
-
-    # probe selection: driver-side over the k-row centroid list, same as
-    # _ivfpq_rescore_search (static IN-list => partition-prunable)
-    def _d2(vals: list) -> float:
-        acc = 0.0
-        for x, c in zip(qv, vals):
-            acc += (x - c) * (x - c)
-        return round(acc, 6)
-
-    probe_ids = [
-        cid for _, cid in sorted(
-            (_d2(vals), int(cid)) for cid, vals in warm_centroids
-        )[:GRAPH_WARM_PROBES]
-    ]
-    # traversal LUT: (s, code, d) — query-to-centroid distance per cell,
-    # rounded in Spark (HALF_UP matches DuckDB ROUND) not in Python
-    # (banker's rounding would drift from the oracle)
-    cent_df = local_df(spark,
-        [(s, int(code), [float(x) for x in vals])
-         for s, cb in enumerate(codebooks) for code, vals in cb],
-        "s int, code int, cent array<double>")
-    qslice = F.slice(
-        F.lit(qv), F.col("s") * GRAPH_PQ_SUBDIM + 1, GRAPH_PQ_SUBDIM)
-    lut = cent_df.select(
-        "s", "code",
-        F.round(
-            F.aggregate(
-                F.zip_with(qslice, "cent", lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0), lambda a, x: a + x),
-            6,
-        ).alias("d"),
-    )
-    # The per-cell distances are computed IN SPARK (HALF_UP round6, the
-    # oracle grid) but collected ONCE (bounded: S·K rows) and re-embedded
-    # as a flat literal array, so every serve round's ADC scoring is a
-    # join-free element_at lookup instead of a per-round F.broadcast(lut)
-    # join; the lookup is bit-exact (the collected doubles round-trip the
-    # driver unchanged). Codes always
-    # hit a populated cell: they were argmin-assigned over these same
-    # codebooks, so the inner-join and lookup forms agree row-for-row.
-    lut_flat: list = [None] * (GRAPH_PQ_S * GRAPH_PQ_K)
-    for r in lut.collect():
-        lut_flat[r["s"] * GRAPH_PQ_K + r["code"]] = r["d"]
-    lut_d = F.element_at(
-        F.lit(lut_flat),
-        (F.col("s") * GRAPH_PQ_K + F.col("code") + 1).cast("int"))
-
-    # serve state lives on the DRIVER (r13, guide §5): `evald` is bounded
-    # by construction for ONE query — warm members (p·N/warm_K ≈ p·√N
-    # rows) plus ≤ beam·c newly scored candidates per round — so the
-    # running {vec_id: round6-d} map is driver-sized at ANY corpus N,
-    # and each round costs exactly TWO bounded single-job actions (edge
-    # probe collect, new-candidate ADC collect). The former shape kept
-    # evald as a growing union-of-checkpoints frame: every round
-    # re-planned it, and each lazy localCheckpoint still materialized one
-    # job per AQE shuffle stage plus broadcast builds — ~8 jobs/round
-    # measured (tools/job_probe.py) vs 2 here, with rounds the only
-    # sequential term at 100 TB. ADC scoring stays IN SPARK with the
-    # exact same expressions (lut join + round6 sum), so every d value
-    # is bit-identical to the joined form — frontier selection and dedup
-    # are order-stable (d, vec_id) sorts over exact doubles either side.
-    # AQE is scoped OFF for the loop's actions: every plan here is
-    # bounded by construction (≤ p·√N warm rows, ≤ beam·c candidates),
-    # so adaptive re-planning buys nothing while its per-exchange query
-    # stages cost one job each — measured 4 jobs/round with AQE vs 2
-    # without on identical plans. Join strategies are pinned explicitly
-    # (broadcast hints on the bounded sides), so no plan degrades to a
-    # sort-merge without AQE's runtime rewrites; the returned rescore
-    # frame executes AFTER the scope exits, under the session default.
-    with _bounded_actions(spark):
-        warm_ids = warm_codes.filter(
-            F.col("cluster").isin(probe_ids) & (F.col("vec_id") != anchor)
-        ).select("vec_id")
-        warm_scored = (
-            codes_long.join(F.broadcast(warm_ids), "vec_id")
-            .select("vec_id", lut_d.alias("d"))
-            .groupBy("vec_id")
-            .agg(F.round(F.sum("d"), 6).alias("d"))
-        ).collect()
-        evald: dict = {int(r["vec_id"]): r["d"] for r in warm_scored}
-        expanded: set = set()
-        for _ in range(rounds):
-            frontier = [
-                vid for _, vid in sorted(
-                    (d, vid)
-                    for vid, d in evald.items() if vid not in expanded
-                )[:beam]
-            ]
-            if not frontier:
-                break
-            # bounded probe: the frontier is a literal IN-list, so a
-            # block-partitioned persisted edge table serves each round
-            # with static partition pruning (plan-asserted)
-            probe = edges.filter(
-                _lit_in("src", frontier) & (F.col("pos") < c))
-            if "block" in edges.columns:  # persisted: prune edge files
-                probe = probe.filter(F.col("block").isin(
-                    sorted({v % GRAPH_EDGE_BLOCKS for v in frontier})))
-            new_ids = sorted(
-                {int(r["dst"]) for r in probe.select("dst").collect()}
-                - evald.keys() - {anchor})
-            expanded.update(frontier)
-            if not new_ids:
-                continue
-            # literal candidate IN-list: on a persisted index this
-            # reaches the code table's parquet scan as a pushed filter
-            # (row-group pruning); the in-memory form scans the
-            # checkpointed blocks
-            scored = (
-                codes_long.filter(_lit_in("vec_id", new_ids))
-                .select("vec_id", lut_d.alias("d"))
-                .groupBy("vec_id")
-                .agg(F.round(F.sum("d"), 6).alias("d"))
-            ).collect()
-            evald.update((int(r["vec_id"]), r["d"]) for r in scored)
-    # optional metadata filter, applied at the SHORTLIST stage (the
-    # filtered-DiskANN strategy): traversal routes through every node so
-    # restrictive filters cannot stall the frontier; only candidates
-    # passing the filter reach the rescore. Pre-filtered traversal is the
-    # brute-force path's strategy (vector_filtered_knn) — the graph form
-    # deliberately post-filters because a 10%-selective filter leaves a
-    # 10%-subgraph whose kNN edges mostly exit the filtered set. The
-    # BROADCAST side is evald (bounded, driver-held); the allow list is
-    # a corpus fraction and may not fit a broadcast at scale.
-    evald_sorted = sorted((d, vid) for vid, d in evald.items())
-    if allowed is None:
-        short_df = local_df(
-            spark, [(int(vid),) for _, vid in evald_sorted[:shortlist]],
-            "vec_id bigint")
-    else:
-        evald_df = local_df(
-            spark, [(int(vid), float(d)) for d, vid in evald_sorted],
-            "vec_id bigint, d double")
-        short_df = (
-            allowed.select("vec_id").join(F.broadcast(evald_df), "vec_id")
-            .orderBy("d", "vec_id").limit(shortlist).select("vec_id"))
-    from neumann_spark.functions.vector import dot_expr
-
-    q = F.lit(qv)
-    if sq_rescore:
-        # compact rescore tier: read the 64 B SQ code rows (never the
-        # floats), dequantize on the per-dimension [lo, hi]/255 grid, and
-        # rank by rounded dequantized cosine — measured 0.908 recall@10
-        # at 0.057 vector-equivalents vs 0.097 for the exact-rescore
-        # high-recall preset (ANN_RECALL.json)
-        sq_codes, sq_lo, sq_hi = index[6], index[7], index[8]
-        deq = _sq_deq_expr(sq_lo, sq_hi)
-        return (
-            sq_codes.join(F.broadcast(short_df), "vec_id")
-            .select("vec_id", F.round(dot_expr(deq, q), 6).alias("score"))
-            .orderBy(F.col("score").desc(), "vec_id")
-            .limit(k)
-        )
+    """Single-query graph search: a batch of one through the serving
+    core `_graph_batch_search`, returned as (vec_id, score) ordered by
+    (score desc, vec_id) and limited to k. `rounds` and `beam` are the
+    budget knobs a larger corpus raises (the HNSW ef analog): the
+    fixture presets hold at N=2K; the measured N=20K operating points
+    are in ANN_RECALL.json scale_runs with the restoring (rounds, beam)
+    settings."""
     return (
-        u.join(F.broadcast(short_df), "vec_id")
-        .select(
-            "vec_id",
-            F.round(dot_expr(F.col("embedding"), q), 6).alias("score"),
-        )
+        _graph_batch_search(
+            spark, sf_dir, (anchor,), rounds, index=index,
+            shortlist=shortlist, sq_rescore=sq_rescore, allowed=allowed,
+            beam=beam, c=c, k=k)
+        .select("vec_id", "score")
         .orderBy(F.col("score").desc(), "vec_id")
         .limit(k)
     )
+
+
+def _codebook_df(spark: SparkSession, codebooks: list) -> DataFrame:
+    """The (s, code, cent) frame of per-subspace codebooks."""
+    return local_df(spark,
+        [(s, int(code), [float(x) for x in vals])
+         for s, cb in enumerate(codebooks) for code, vals in cb],
+        "s int, code int, cent array<double>")
 
 
 def _pq_assign_long(u_new: DataFrame, codebooks: list,
@@ -2603,10 +2385,7 @@ def _pq_assign_long(u_new: DataFrame, codebooks: list,
             ])
         ).alias("x"),
     ).select("vec_id", F.col("x.s").alias("s"), F.col("x.sub").alias("sub"))
-    cent = local_df(spark,
-        [(s, int(code), [float(x) for x in vals])
-         for s, cb in enumerate(codebooks) for code, vals in cb],
-        "s int, code int, cent array<double>")
+    cent = _codebook_df(spark, codebooks)
     d = F.round(
         F.aggregate(
             F.zip_with("sub", "cent", lambda x, c: (x - c) * (x - c)),
@@ -3800,200 +3579,248 @@ def _batch_luts(qdf: DataFrame, cent_df: DataFrame) -> DataFrame:
 
 
 GRAPH_BATCH_ANCHORS = (0, 3, 7)
-# batched-search regime thresholds: above GRAPH_PROBE_INLIST_MAX distinct
-# frontier sources the edge probe drops the literal IN-list (plan bloat)
-# and relies on block pruning + the broadcast-hash frontier join; above
-# GRAPH_BATCH_BROADCAST_MAX anchors the filtered shortlist stops hinting
-# broadcast(evald) (the batch-wide evald frame scales with |anchors|)
+# batched-search regime thresholds: a batch whose whole frontier
+# (|anchors|·beam sources) fits one literal IN-list of at most
+# GRAPH_PROBE_INLIST_MAX ids keeps its evaluated maps on the driver;
+# wider batches keep keyed frames, and above GRAPH_PROBE_INLIST_MAX
+# distinct frontier sources their edge probe drops the literal IN-list
+# (plan bloat) for block pruning + the broadcast-hash frontier join.
+# Above GRAPH_BATCH_BROADCAST_MAX anchors the batch-wide pair and evald
+# frames stop being broadcast-hinted (they scale with |anchors|)
 GRAPH_PROBE_INLIST_MAX = 1024
 GRAPH_BATCH_BROADCAST_MAX = 256
-# at or below this anchor count the batch serve keeps its evaluated maps
-# on the DRIVER (bounded: |anchors| · (warm + beam·c·T) entries — tens of
-# MB at the widest caps) and pays 2 bounded jobs/round; above it the
-# frame-state regime below scales to arbitrary batch sizes
-GRAPH_BATCH_DRIVER_STATE_MAX = 32
+
+
+def _check_loaded_corpus(index: tuple, u: DataFrame, sf_dir: str) -> None:
+    """Refuse an exact rescore of a disk-loaded index against `sf_dir`.
+
+    A loaded index re-derives its unit frame from sf_dir, which is the
+    corpus, not the indexed set. The persisted SQ code table IS the
+    covered id set — refuse if the index holds ids the corpus lacks (a
+    grown index: their floats are unavailable, the rescore join would
+    silently drop them), and refuse if covered rows' VALUES changed under
+    the index (the XOR fingerprint over round-6 unit values persisted at
+    build — membership alone cannot see an UPDATEd embedding, whose
+    traversal/ADC used the persisted codes while the rescore would use
+    the new floats). Runs BEFORE the traversal so an invalid (index,
+    corpus) pair is refused in two bounded jobs, not after T rounds of
+    search; and ONCE per (index, sf_dir) via the meta cache — never one
+    corpus-scale action per search. Shrunk indexes stay valid: the
+    fingerprint compares over the covered subset only (the shortlist
+    derives from index structures, so extra corpus rows are inert)."""
+    meta = index[9] if len(index) > 9 else None
+    cache = meta.get("validated") if isinstance(meta, dict) else None
+    if cache is not None and sf_dir in cache:
+        return
+    covered = index[6].select("vec_id")
+    n_missing = covered.join(
+        u.select("vec_id"), "vec_id", "left_anti").count()
+    if n_missing:
+        raise ValueError(
+            f"loaded graph index covers {n_missing} vec_ids "
+            f"absent from {sf_dir} embeddings; exact rescore "
+            "needs their float vectors — search with "
+            "sq_rescore=True (the self-contained SQ8 tier) or "
+            "persist the grown corpus")
+    if isinstance(meta, dict) and meta.get("fp") is not None:
+        _, corpus_fp = _fp_agg(u.join(covered, "vec_id", "semi"))
+        if (corpus_fp or 0) != meta["fp"]:
+            raise ValueError(
+                f"{sf_dir} embeddings changed under the loaded "
+                "graph index (corpus fingerprint mismatch): "
+                "traversal/ADC would use stale persisted codes "
+                "while the exact rescore reads the new floats — "
+                "rebuild or maintain the index through "
+                "knn_graph_insert/delete")
+    if cache is not None:
+        cache[sf_dir] = True
 
 
 def _graph_batch_search(spark: SparkSession, sf_dir: str,
-                        anchors: tuple, rounds: int,
+                        anchors: tuple, rounds: int, *,
+                        index: tuple | None = None,
                         shortlist: int = GRAPH_SHORTLIST,
                         sq_rescore: bool = False,
                         allowed: DataFrame | None = None,
                         beam: int = GRAPH_B,
-                        c: int = GRAPH_C) -> DataFrame:
-    """BATCHED round-synchronous graph search: all queries advance
-    through the SAME T rounds with frontier/evaluated frames keyed by
-    query id. This is the documented mitigation for the per-round
-    job-submit floor (docs/DESIGN.md): one round = ONE edge probe + ONE
-    ADC join serving every query, so the driver-loop cost amortizes over
-    the batch — at high QPS this is the only shape that scales, and it
-    is exactly how a 100 TB deployment drains a query queue."""
-    index = knn_graph_index(spark, sf_dir)
+                        c: int = GRAPH_C,
+                        k: int = PQ_TOPK) -> DataFrame:
+    """The graph-ANN serving core: round-synchronous search for a batch
+    of query anchors — a single query is a batch of one — over any index
+    tuple (session-built, loaded, grown or shrunk; None serves the
+    session index of sf_dir). All queries advance through the SAME T
+    rounds: warm-start with each anchor's GRAPH_WARM_PROBES nearest Lloyd
+    lists, then per round the ADC-top-beam unexpanded nodes expand their
+    top-c edges and the new candidates are ADC-ranked; finally the
+    ADC-top-shortlist rescores exactly (or on the SQ8 tier). One round =
+    ONE edge probe + ONE ADC join serving every query, so the per-round
+    job floor amortizes over the batch (docs/DESIGN.md) — at high QPS
+    this is how a 100 TB deployment drains a query queue. Returns
+    (qid, vec_id, score): each anchor's top-k by (score desc, vec_id)."""
+    index = index if index is not None else knn_graph_index(spark, sf_dir)
     edges, warm_codes, warm_centroids, codes_long, codebooks = index[:5]
-    u = index[5]
+    # load_graph_index persists everything EXCEPT the float unit frame,
+    # which is re-derived from sf_dir and stays LAZY (r14): the anchor
+    # predicate pushes below the normalize projection to the parquet scan
+    # (row-group pruning on vec_id), and the rescore join scans the
+    # corpus once at collect time — never a per-call checkpoint of the
+    # whole normalized corpus (20.9 s/query measured at 1M)
+    from_disk = len(index) <= 5 or index[5] is None
+    u = (unit_embeddings(load(spark, sf_dir, "embeddings")) if from_disk
+         else index[5])
+    if from_disk and not sq_rescore and len(index) > 6:
+        _check_loaded_corpus(index, u, sf_dir)
+    qids = [int(a) for a in anchors]
     qvs = {
         int(r["vec_id"]): [float(x) for x in r["embedding"]]
-        for r in u.filter(_lit_in("vec_id", anchors)).collect()
+        for r in u.filter(_lit_in("vec_id", qids)).collect()
     }
-    cent_df = local_df(spark,
-        [(s, int(code), [float(x) for x in vals])
-         for s, cb in enumerate(codebooks) for code, vals in cb],
-        "s int, code int, cent array<double>")
-    qdf = local_df(spark,
-        [(int(a), qvs[int(a)]) for a in anchors],
-        "qid bigint, qv array<double>")
-    luts = _batch_luts(qdf, cent_df)
-
-    def _d2(q: list, vals: list) -> float:
-        acc = 0.0
-        for x, c in zip(q, vals):
-            acc += (x - c) * (x - c)
-        return round(acc, 6)
-
     # probe selection stays a driver-side ranking of the k-row centroid
     # list per anchor (bounded: |anchors| * k tuples), but the warm frame
     # is ONE broadcast join of the (qid, cluster) probe pairs against the
-    # cluster-partitioned assignment table — not a per-anchor union chain
-    qids = [int(a) for a in anchors]
-    qx_of = {q: i for i, q in enumerate(qids)}
-    probe_rows = [
-        (q, qx_of[q], int(cid))
-        for q in qids
-        for _, cid in sorted(
-            (_d2(qvs[q], vals), int(cid))
-            for cid, vals in warm_centroids)[:GRAPH_WARM_PROBES]
-    ]
-    probe_df = local_df(spark, probe_rows, "qid bigint, qx int, cluster int")
-    wnd = Window.partitionBy("qid").orderBy("d", "vec_id")
-    if len(anchors) <= GRAPH_BATCH_DRIVER_STATE_MAX:
-        # SMALL-batch regime (r13): per-query evaluated state is bounded
-        # (warm + beam·c·T rows each), so for a bounded anchor count the
-        # whole evald map is driver-sized and each round costs TWO
-        # bounded single-job actions — the frame-state form below paid
-        # ~12 jobs/round in AQE stage materializations (job_probe.py).
-        # The per-anchor LUTs collect once (|anchors|·S·K rows) and
-        # re-embed as one flat literal indexed by (qx, s, code) — the
-        # d doubles round-trip the driver bit-exactly.
-        flat: list = [None] * (len(qids) * GRAPH_PQ_S * GRAPH_PQ_K)
-        for r in luts.collect():
-            flat[(qx_of[int(r["qid"])] * GRAPH_PQ_S + r["s"])
-                 * GRAPH_PQ_K + r["code"]] = r["d"]
-        lut_d = F.element_at(
-            F.lit(flat),
-            ((F.col("qx") * GRAPH_PQ_S + F.col("s")) * GRAPH_PQ_K
-             + F.col("code") + 1).cast("int"))
+    # cluster-partitioned assignment table
+    probe_df = local_df(spark, [
+        (q, cid) for q in qids
+        for cid in _nearest_ids(qvs[q], warm_centroids, GRAPH_WARM_PROBES)
+    ], "qid bigint, cluster int")
+    warm = (
+        warm_codes.join(F.broadcast(probe_df), "cluster")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id")
+    )
+    cent_df = _codebook_df(spark, codebooks)
+    qdf = local_df(spark,
+        [(q, qvs[q]) for q in qids], "qid bigint, qv array<double>")
+    # every anchor's traversal LUT (qid, s, code, d), computed in Spark
+    # (HALF_UP round6 — the oracle grid) ONCE and checkpointed, so each
+    # round's ADC join reads it as a broadcast of materialized blocks
+    luts = _batch_luts(qdf, cent_df).localCheckpoint(eager=True)
+    hint = (F.broadcast if len(qids) <= GRAPH_BATCH_BROADCAST_MAX
+            else lambda df: df)
 
-        def _score(pairs_df: DataFrame) -> list:
-            return (
-                codes_long.join(F.broadcast(pairs_df), "vec_id")
-                .select("qid", "vec_id", lut_d.alias("d"))
-                .groupBy("qid", "vec_id")
-                .agg(F.round(F.sum("d"), 6).alias("d"))
-            ).collect()
-
-        with _bounded_actions(spark):
-            warm_pairs = (
-                warm_codes.join(F.broadcast(probe_df), "cluster")
-                .filter(F.col("vec_id") != F.col("qid"))
-                .select("qid", "qx", "vec_id"))
-            evald: dict = {q: {} for q in qids}
-            for r in _score(warm_pairs):
-                evald[int(r["qid"])][int(r["vec_id"])] = r["d"]
-            expanded: dict = {q: set() for q in qids}
-            for _ in range(rounds):
-                fr_pairs = []
-                for q in qids:
-                    fr_pairs += [
-                        (q, vid) for _, vid in sorted(
-                            (d, vid) for vid, d in evald[q].items()
-                            if vid not in expanded[q])[:beam]
-                    ]
-                if not fr_pairs:
-                    break
-                srcs = sorted({v for _, v in fr_pairs})
-                # the literal src IN-list both prunes the edge scan and
-                # BOUNDS the probe collect (≤ |srcs|·c rows); at ≤
-                # GRAPH_BATCH_DRIVER_STATE_MAX anchors it stays well
-                # under the plan-bloat envelope GRAPH_PROBE_INLIST_MAX
-                # guards in the frame regime
-                probe = edges.filter(
-                    _lit_in("src", srcs) & (F.col("pos") < c))
-                if "block" in edges.columns:
-                    probe = probe.filter(F.col("block").isin(
-                        sorted({v % GRAPH_EDGE_BLOCKS for v in srcs})))
-                by_src: dict = {}
-                for r in probe.select("src", "dst").collect():
-                    by_src.setdefault(int(r["src"]), []).append(
-                        int(r["dst"]))
-                new_pairs: set = set()
-                for q, s0 in fr_pairs:
-                    expanded[q].add(s0)
-                    for dst in by_src.get(s0, ()):
-                        if dst != q and dst not in evald[q]:
-                            new_pairs.add((q, dst))
-                if not new_pairs:
-                    continue
-                pairs_df = local_df(
-                    spark,
-                    [(q, qx_of[q], v) for q, v in sorted(new_pairs)],
-                    "qid bigint, qx int, vec_id bigint")
-                for r in _score(pairs_df):
-                    evald[int(r["qid"])][int(r["vec_id"])] = r["d"]
-        if allowed is None:
-            short_rows = [
-                (q, vid)
-                for q in qids
-                for _, vid in sorted(
-                    (d, vid) for vid, d in evald[q].items())[:shortlist]
-            ]
-            short_df = local_df(spark, short_rows,
-                                "qid bigint, vec_id bigint")
-        else:
-            evald_df = local_df(
-                spark,
-                [(q, vid, float(d))
-                 for q in qids for vid, d in sorted(evald[q].items())],
-                "qid bigint, vec_id bigint, d double")
-            short_df = (
-                allowed.select("vec_id")
-                .join(F.broadcast(evald_df), "vec_id")
-                .withColumn("rn", F.row_number().over(wnd))
-                .filter(F.col("rn") <= shortlist)
-                .select("qid", "vec_id")
-            )
-        return _batch_rescore_tail(
-            spark, index, u, qvs, anchors, short_df, sq_rescore)
-
-    # LARGE-batch regime: frontier/evaluated state stays in KEYED
-    # DATAFRAMES — at a 10k-query batch the per-round driver state is
-    # ONLY the collected frontier (B * |anchors| pairs, needed anyway as
-    # the static src IN-list that prunes edge blocks at the source); the
-    # anti-join against expanded_df runs executor-side.
-    luts = luts.localCheckpoint(eager=True)
-
-    def adc(ids: DataFrame) -> DataFrame:  # ids: (qid, vec_id)
+    def adc(codes: DataFrame, pairs: DataFrame) -> DataFrame:
+        # pairs: (qid, vec_id). Each d is on the 1e-6 grid, so the rounded
+        # sum cannot depend on the order the 32 terms arrive in
         return (
-            ids.join(codes_long, "vec_id")
+            codes.join(hint(pairs), "vec_id")
             .join(F.broadcast(luts), ["qid", "s", "code"])
             .groupBy("qid", "vec_id")
             .agg(F.round(F.sum("d"), 6).alias("d"))
         )
 
-    warm = (
-        warm_codes.join(F.broadcast(probe_df.drop("qx")), "cluster")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-    )
-    # lazy checkpoints in the round loop (same rationale as the
-    # single-query form): each round's frontier collect materializes the
-    # truncated evald plan inside its own job — one job per round, not
-    # three (evald checkpoint + expanded checkpoint + collect).
-    # expanded_df seeds from a true empty LocalRelation (zero partitions,
-    # pruned from unions at optimization time)
-    evald = adc(warm).localCheckpoint(eager=False)
+    def probe_edges(srcs: list) -> DataFrame:
+        # source-id pruning: up to GRAPH_PROBE_INLIST_MAX frontier sources
+        # a literal IN-list reaches the parquet scan as a pushed filter
+        # (plus row-group stats pruning); above it the list would bloat
+        # the plan and slow Catalyst, so pruning falls to the per-block
+        # partition filter (always ≤ GRAPH_EDGE_BLOCKS literals) and
+        # source matching to the caller's broadcast-hash frontier join
+        # (plan-asserted in tests/test_plans.py for both regimes)
+        probe = edges.filter(F.col("pos") < c)
+        if len(srcs) <= GRAPH_PROBE_INLIST_MAX:
+            probe = probe.filter(_lit_in("src", srcs))
+        if "block" in edges.columns:  # persisted: prune edge files
+            probe = probe.filter(F.col("block").isin(
+                sorted({v % GRAPH_EDGE_BLOCKS for v in srcs})))
+        return probe
+
+    # optional metadata filter, applied at the SHORTLIST stage (the
+    # filtered-DiskANN strategy): traversal routes through every node so
+    # restrictive filters cannot stall the frontier; only candidates
+    # passing the filter reach the rescore (a 10%-selective pre-filter
+    # would leave a 10%-subgraph whose kNN edges mostly exit the set).
+    # The broadcast side is the bounded evald frame while the batch keeps
+    # it small, never the allow list (a corpus fraction); past
+    # GRAPH_BATCH_BROADCAST_MAX anchors AQE picks from measured sizes
+    wnd = Window.partitionBy("qid").orderBy("d", "vec_id")
+
+    def shortlist_of(evald_df: DataFrame) -> DataFrame:
+        if allowed is not None:
+            evald_df = allowed.select("vec_id").join(hint(evald_df), "vec_id")
+        return (
+            evald_df.withColumn("rn", F.row_number().over(wnd))
+            .filter(F.col("rn") <= shortlist)
+            .select("qid", "vec_id")
+        )
+
+    if len(qids) * beam <= GRAPH_PROBE_INLIST_MAX:
+        # DRIVER-STATE regime (r13): per-query evaluated state is bounded
+        # (warm + beam·c·T rows each), so the running {vec_id: round6-d}
+        # maps are driver-sized, and the frontier is one literal src
+        # IN-list that prunes a block-partitioned edge table at the
+        # source. Each round is two bounded actions: the edge probe
+        # collect and the new-candidate ADC collect, whose literal
+        # vec_id IN-list reaches a persisted code table's parquet scan
+        # (row-group pruning — the r14 1M serve fix). AQE is scoped OFF:
+        # every plan here is bounded by construction and its join
+        # strategies are pinned by broadcast hints, while each adaptive
+        # query stage would cost one job; the returned rescore frame
+        # executes after the scope exits, under the session default.
+        evald: dict = {q: {} for q in qids}
+        expanded: dict = {q: set() for q in qids}
+
+        def score(codes: DataFrame, pairs: DataFrame) -> None:
+            for r in adc(codes, pairs).collect():
+                evald[int(r["qid"])][int(r["vec_id"])] = r["d"]
+
+        with _bounded_actions(spark):
+            score(codes_long, warm)
+            for _ in range(rounds):
+                fr_pairs = [
+                    (q, vid)
+                    for q in qids
+                    for _, vid in sorted(
+                        (d, vid) for vid, d in evald[q].items()
+                        if vid not in expanded[q])[:beam]
+                ]
+                if not fr_pairs:
+                    break
+                by_src: dict = {}
+                for r in probe_edges(sorted({v for _, v in fr_pairs})) \
+                        .select("src", "dst").collect():
+                    by_src.setdefault(int(r["src"]), []).append(
+                        int(r["dst"]))
+                new_pairs: set = set()
+                for q, s0 in fr_pairs:
+                    expanded[q].add(s0)
+                    new_pairs.update(
+                        (q, dst) for dst in by_src.get(s0, ())
+                        if dst != q and dst not in evald[q])
+                if new_pairs:
+                    score(
+                        codes_long.filter(_lit_in(
+                            "vec_id", sorted({v for _, v in new_pairs}))),
+                        local_df(spark, sorted(new_pairs),
+                                 "qid bigint, vec_id bigint"))
+        if allowed is None:
+            short_df = local_df(spark, [
+                (q, vid)
+                for q in qids
+                for _, vid in sorted(
+                    (d, vid) for vid, d in evald[q].items())[:shortlist]
+            ], "qid bigint, vec_id bigint")
+        else:
+            short_df = shortlist_of(local_df(
+                spark,
+                [(q, vid, float(d))
+                 for q in qids for vid, d in sorted(evald[q].items())],
+                "qid bigint, vec_id bigint, d double"))
+        return _batch_rescore_tail(index, u, qdf, short_df, sq_rescore, k)
+
+    # FRAME-STATE regime: frontier/evaluated state stays in KEYED
+    # DATAFRAMES — at a 10k-query batch the per-round driver state is
+    # ONLY the collected frontier (beam·|anchors| pairs); the anti-join
+    # against expanded_df runs executor-side. On a 4-core box it serves
+    # 300 (filtered) and 512 anchors faster than one unchunked
+    # driver-state loop. Lazy checkpoints: each round's frontier collect materializes the
+    # truncated evald plan inside its own job. expanded_df seeds from a
+    # true empty LocalRelation and stays an unchecked union of T bounded
+    # driver-local frontier frames — re-planning it is cheaper than a
+    # per-round checkpoint job (§5)
+    evald_df = adc(codes_long, warm).localCheckpoint(eager=False)
     expanded_df = empty_df(spark, "qid bigint, vec_id bigint")
     for _ in range(rounds):
-        unexp = evald.join(expanded_df, ["qid", "vec_id"], "left_anti")
+        unexp = evald_df.join(expanded_df, ["qid", "vec_id"], "left_anti")
         fr_pairs = [
             (int(r["qid"]), int(r["vec_id"]))
             for r in (unexp.withColumn("rn", F.row_number().over(wnd))
@@ -4002,102 +3829,45 @@ def _graph_batch_search(spark: SparkSession, sf_dir: str,
         ]
         if not fr_pairs:
             break
-        srcs = sorted({v for _, v in fr_pairs})
-        fr_df = local_df(spark,
-            [(q, v) for q, v in fr_pairs], "qid bigint, src bigint")
-        probe = edges.filter(F.col("pos") < c)
-        # source-id pruning: below GRAPH_PROBE_INLIST_MAX distinct
-        # frontier sources, a literal IN-list reaches the parquet scan
-        # as a pushed filter (plus row-group stats pruning); above it —
-        # a multi-thousand-query batch — the literal list bloats the
-        # plan and slows Catalyst, so pruning falls to the per-block
-        # partition filter (always ≤ GRAPH_EDGE_BLOCKS literals) and
-        # source matching to the broadcast-hash probe join below (the
-        # equi-key keeps it a BroadcastHashJoin, never a BNLJ —
-        # plan-asserted in tests/test_plans.py for both regimes)
-        if len(srcs) <= GRAPH_PROBE_INLIST_MAX:
-            probe = probe.filter(_lit_in("src", srcs))
-        if "block" in edges.columns:
-            probe = probe.filter(F.col("block").isin(
-                sorted({v % GRAPH_EDGE_BLOCKS for v in srcs})))
+        fr_df = local_df(spark, fr_pairs, "qid bigint, src bigint")
         new_ids = (
-            probe.join(F.broadcast(fr_df), "src")
+            probe_edges(sorted({v for _, v in fr_pairs}))
+            .join(F.broadcast(fr_df), "src")
             .select("qid", F.col("dst").alias("vec_id"))
             .filter(F.col("vec_id") != F.col("qid"))
             .distinct()
-            .join(evald.select("qid", "vec_id"),
+            .join(evald_df.select("qid", "vec_id"),
                   ["qid", "vec_id"], "left_anti")
         )
-        evald = evald.unionByName(adc(new_ids)).localCheckpoint(eager=False)
-        # no checkpoint: expanded_df is a union of T bounded driver-local
-        # frontier frames (data already on the driver) — the plan depth
-        # grows linearly in rounds and re-planning a union of local
-        # 1-slice frames is cheaper than the per-round checkpoint job the
-        # truncation cost (§5)
+        evald_df = evald_df.unionByName(
+            adc(codes_long, new_ids)).localCheckpoint(eager=False)
         expanded_df = expanded_df.unionByName(
             fr_df.select("qid", F.col("src").alias("vec_id")))
-    # optional metadata filter at the shortlist stage (the filtered-
-    # DiskANN strategy, same placement as the single-query form). The
-    # broadcast hint goes on evald only while the BATCH keeps it small:
-    # evald is bounded per query (warm + beam*C*rounds rows), so at
-    # |anchors| beyond GRAPH_BATCH_BROADCAST_MAX the batch-wide frame
-    # can exceed broadcast limits — there the hint comes off and AQE
-    # picks the strategy from measured sizes (the allow list may well
-    # be the smaller side at tight selectivity)
-    if allowed is None:
-        short_src = evald
-    elif len(anchors) <= GRAPH_BATCH_BROADCAST_MAX:
-        short_src = allowed.select("vec_id").join(
-            F.broadcast(evald), "vec_id")
-    else:
-        short_src = allowed.select("vec_id").join(evald, "vec_id")
-    short_df = (
-        short_src.withColumn("rn", F.row_number().over(wnd))
-        .filter(F.col("rn") <= shortlist)
-        .select("qid", "vec_id")
-    )
     return _batch_rescore_tail(
-        spark, index, u, qvs, anchors, short_df, sq_rescore)
+        index, u, qdf, shortlist_of(evald_df), sq_rescore, k)
 
 
-def _batch_rescore_tail(spark: SparkSession, index: tuple, u: DataFrame,
-                        qvs: dict, anchors: tuple, short_df: DataFrame,
-                        sq_rescore: bool) -> DataFrame:
-    """Shared exact/SQ8 rescore of every query's shortlist — identical
-    for the driver-state and frame-state regimes (both deliver a bounded
-    (qid, vec_id) shortlist frame)."""
+def _batch_rescore_tail(index: tuple, u: DataFrame, qdf: DataFrame,
+                        short_df: DataFrame, sq_rescore: bool,
+                        k: int) -> DataFrame:
+    """Exact or SQ8 rescore of every query's (qid, vec_id) shortlist
+    against its (qid, qv) row, keeping each query's top-k."""
     from neumann_spark.functions.vector import dot_expr
 
-    qdf = local_df(spark,
-        [(a, qvs[a]) for a in anchors], "qid bigint, qv array<double>")
-    if sq_rescore:
-        # compact tier, batched: rank every query's shortlist against the
-        # 64 B SQ8 rows (never the floats) in the same two broadcast
-        # joins — the per-query dequantized dot is one map-side expr
-        sq_codes, sq_lo, sq_hi = index[6], index[7], index[8]
-        deq = _sq_deq_expr(sq_lo, sq_hi)
-        scored = (
-            sq_codes.join(F.broadcast(short_df), "vec_id")
-            .join(F.broadcast(qdf), "qid")
-            .select(
-                "qid", "vec_id",
-                F.round(dot_expr(deq, F.col("qv")), 6).alias("score"),
-            )
-        )
-    else:
-        scored = (
-            u.join(F.broadcast(short_df), "vec_id")
-            .join(F.broadcast(qdf), "qid")
-            .select(
-                "qid", "vec_id",
-                F.round(dot_expr(F.col("embedding"), F.col("qv")), 6)
-                .alias("score"),
-            )
-        )
-    wnd2 = Window.partitionBy("qid").orderBy(F.col("score").desc(), "vec_id")
+    # compact tier: rank against the 64 B SQ8 rows (never the floats),
+    # dequantized on the per-dimension [lo, hi]/255 grid
+    rows, vec = ((index[6], _sq_deq_expr(index[7], index[8])) if sq_rescore
+                 else (u, F.col("embedding")))
+    scored = (
+        rows.join(F.broadcast(short_df), "vec_id")
+        .join(F.broadcast(qdf), "qid")
+        .select("qid", "vec_id",
+                F.round(dot_expr(vec, F.col("qv")), 6).alias("score"))
+    )
+    wnd = Window.partitionBy("qid").orderBy(F.col("score").desc(), "vec_id")
     return (
-        scored.withColumn("rn", F.row_number().over(wnd2))
-        .filter(F.col("rn") <= PQ_TOPK)
+        scored.withColumn("rn", F.row_number().over(wnd))
+        .filter(F.col("rn") <= k)
         .select("qid", "vec_id", "score")
     )
 
@@ -4159,15 +3929,9 @@ def graph_auto_batch_search(spark: SparkSession, sf_dir: str,
     stored cardinality — `graph_auto_search`'s batch twin, so the
     queue-draining shape a 100 TB deployment runs also auto-scales its
     (rounds, beam, shortlist) with N instead of pinning fixture knobs."""
-    rounds_base, shortlist_base, sq = GRAPH_PRESETS[preset]
-    index = knn_graph_index(spark, sf_dir)
-    meta = index[9] if len(index) > 9 else None
-    n = meta["n"] if meta else index[6].count()
-    rounds, beam, c, shortlist = graph_auto_budget(
-        n, rounds_base, GRAPH_B, shortlist_base, caps=_meta_caps(meta))
+    index, rounds, budget = _auto_budget(spark, sf_dir, None, preset)
     return _graph_batch_search(
-        spark, sf_dir, anchors, rounds, shortlist=shortlist,
-        sq_rescore=sq, beam=beam, c=c)
+        spark, sf_dir, anchors, rounds, index=index, **budget)
 
 
 @register("ann_graph_batch_auto",
@@ -4324,8 +4088,8 @@ def save_graph_index_frames(spark: SparkSession, index: tuple,
 
 
 def load_graph_index(spark: SparkSession, path: str) -> tuple:
-    """Load a persisted graph index in the exact shapes
-    `_graph_rescore_from` takes (the 9-tuple layout minus the unit frame,
+    """Load a persisted graph index in the exact shapes the serving core
+    `_graph_batch_search` takes (the 9-tuple layout minus the unit frame,
     which stays None so searches re-derive it only if rescoring exactly);
     the edge frame keeps its `block` partition column so round probes
     prune edge files.
@@ -4434,6 +4198,21 @@ def load_graph_index(spark: SparkSession, path: str) -> tuple:
             None, sq_codes, sq_lo, sq_hi, meta)
 
 
+def _search_persisted(spark: SparkSession, index: tuple, prefix: str,
+                      search) -> DataFrame:
+    """Persist `index` under a Spark-visible scratch dir (`_scratch_dir`),
+    load it back and return `search(loaded)`'s rows, collected before
+    the files vanish."""
+    path, cleanup = _scratch_dir(spark, prefix)
+    try:
+        save_graph_index_frames(spark, index, path)
+        out = search(load_graph_index(spark, path))
+        rows = out.collect()
+    finally:
+        cleanup()
+    return local_df(spark, rows, out.schema)
+
+
 @register("ann_graph_index_persist",
           oracle=_graph_rescore_sql(GRAPH_T_LOW))
 def ann_graph_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4447,15 +4226,9 @@ def ann_graph_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan-asserted in tests/test_plans.py). Scratch lives under the
     Spark-visible warehouse dir (`_scratch_dir`) — executors re-read
     the persisted parquet on any deployment."""
-    path, cleanup = _scratch_dir(spark, "graph_index_")
-    try:
-        save_graph_index(spark, sf_dir, path)
-        index = load_graph_index(spark, path)
-        out = _graph_rescore_from(spark, sf_dir, index, GRAPH_T_LOW)
-        rows = out.collect()  # materialize before the files vanish
-    finally:
-        cleanup()
-    return local_df(spark, rows, out.schema)
+    return _search_persisted(
+        spark, knn_graph_index(spark, sf_dir), "graph_index_",
+        lambda index: _graph_rescore_from(spark, sf_dir, index, GRAPH_T_LOW))
 
 
 @register("ann_graph_insert_persist", oracle=_graph_insert_sql())
@@ -4469,22 +4242,9 @@ def ann_graph_insert_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     reordered grown edge block, a truncated new-cluster partition)
     hash-mismatches. Completes the lifecycle matrix: build / insert /
     delete / stream-ingest / CDC, each × in-memory and (here) on-disk."""
-    emb = load(spark, sf_dir, "embeddings")
-    max_id = int(emb.agg(F.max("vec_id")).head()[0])
-    cut = max_id - (GRAPH_INSERT_BATCH - 1)
-    grown = knn_graph_insert(
-        spark,
-        _build_graph_index(spark, emb.filter(F.col("vec_id") < cut)),
-        emb.filter(F.col("vec_id") >= cut))
-    path, cleanup = _scratch_dir(spark, "graph_grown_")
-    try:
-        save_graph_index_frames(spark, grown, path)
-        index = load_graph_index(spark, path)
-        out = _graph_rescore_from(spark, sf_dir, index, GRAPH_T_LOW)
-        rows = out.collect()  # materialize before the files vanish
-    finally:
-        cleanup()
-    return local_df(spark, rows, out.schema)
+    return _search_persisted(
+        spark, _grown_index(spark, sf_dir), "graph_grown_",
+        lambda index: _graph_rescore_from(spark, sf_dir, index, GRAPH_T_LOW))
 
 
 @register("ann_graph_rescore", oracle=_graph_rescore_sql(GRAPH_T_LOW))
@@ -4502,7 +4262,7 @@ def ann_graph_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     build-provisioned width caps and holds the preset's band (measured
     0.920 at 20K, 0.904 at 65K) instead of decaying to 0.41/0.29 under
     frozen knobs (scale_runs auto_presets).
-    Spark-first shape: see _graph_rescore_search."""
+    Spark-first shape: see _graph_batch_search, the serving core."""
     return graph_auto_search(spark, sf_dir, preset="low")
 
 
@@ -4533,6 +4293,16 @@ def ann_graph_rescore_high_recall(spark: SparkSession,
     return graph_auto_search(spark, sf_dir, preset="high_recall")
 
 
+def _grown_index(spark: SparkSession, sf_dir: str) -> tuple:
+    """The index built over all but the GRAPH_INSERT_BATCH highest ids,
+    grown by inserting those through `knn_graph_insert`."""
+    emb = load(spark, sf_dir, "embeddings")
+    cut = int(emb.agg(F.max("vec_id")).head()[0]) - (GRAPH_INSERT_BATCH - 1)
+    return knn_graph_insert(
+        spark, _build_graph_index(spark, emb.filter(F.col("vec_id") < cut)),
+        emb.filter(F.col("vec_id") >= cut))
+
+
 @register("ann_graph_insert_search", oracle=_graph_insert_sql())
 def ann_graph_insert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental index maintenance (new r8): build the graph index over
@@ -4545,14 +4315,8 @@ def ann_graph_insert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole insert path, and the search in one statement — so a mis-grown
     structure (an unassigned new node, a stale affected neighbourhood, a
     duplicated forward block) hash-mismatches."""
-    emb = load(spark, sf_dir, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).head()[0]
-    cut = int(max_id) - (GRAPH_INSERT_BATCH - 1)
-    base = emb.filter(F.col("vec_id") < cut)
-    incoming = emb.filter(F.col("vec_id") >= cut)
-    index = _build_graph_index(spark, base)
-    grown = knn_graph_insert(spark, index, incoming)
-    return _graph_rescore_from(spark, sf_dir, grown, GRAPH_T_LOW)
+    return _graph_rescore_from(
+        spark, sf_dir, _grown_index(spark, sf_dir), GRAPH_T_LOW)
 
 
 @register("ann_graph_stream_insert", oracle=_graph_stream_insert_sql())
@@ -4997,15 +4761,10 @@ def ann_graph_rescore_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     tempfile.mkdtemp would break every non-local master (ADVICE r10) —
     and is removed through the Hadoop FileSystem API for the same
     reason."""
-    scratch, cleanup = _scratch_dir(spark, "graph_auto_")
-    try:
-        save_graph_index(spark, sf_dir, scratch)
-        index = load_graph_index(spark, scratch)
-        out = graph_auto_search(spark, sf_dir, index, preset="compact")
-        rows = out.collect()  # materialize before the files vanish
-    finally:
-        cleanup()
-    return local_df(spark, rows, out.schema)
+    return _search_persisted(
+        spark, knn_graph_index(spark, sf_dir), "graph_auto_",
+        lambda index: graph_auto_search(
+            spark, sf_dir, index, preset="compact"))
 
 
 # the scale points the law query pins beyond the fixture cardinality:

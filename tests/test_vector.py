@@ -665,10 +665,20 @@ def test_graph_batch_scales_to_128_anchors(spark):
     side). Since r9 the expanded set is a keyed DataFrame accumulated by
     union (driver holds only each round's collected frontier), so the
     batch width costs no per-round driver state rebuild."""
-    from neumann_spark.pipeline.ann import GRAPH_T_LOW, _graph_batch_search
+    from neumann_spark.pipeline.ann import (
+        GRAPH_B,
+        GRAPH_PROBE_INLIST_MAX,
+        GRAPH_T_LOW,
+        _graph_batch_search,
+    )
     from tests.conftest import SF_DIR
 
     n_anchors = 128
+    # 128 * GRAPH_B = 1024: the whole frontier still fits one literal
+    # IN-list, so this batch runs the driver-state loop; the 300- and
+    # 512-anchor tests and the join-form differential cover the
+    # frame-state loop
+    assert n_anchors * GRAPH_B == GRAPH_PROBE_INLIST_MAX
     anchors = tuple(range(n_anchors))
     rows = _graph_batch_search(
         spark, SF_DIR, anchors, GRAPH_T_LOW).collect()
@@ -1288,6 +1298,7 @@ def test_graph_stale_corpus_detected(spark, tmp_path):
     from neumann_spark.pipeline.ann import (
         GRAPH_T_LOW,
         _build_graph_index,
+        _graph_batch_search,
         _graph_rescore_from,
         load_graph_index,
         save_graph_index_frames,
@@ -1322,6 +1333,17 @@ def test_graph_stale_corpus_detected(spark, tmp_path):
     out = _graph_rescore_from(
         spark, corpus, loaded, GRAPH_T_LOW, sq_rescore=True).collect()
     assert len(out) == 10
+    # batches run the same pre-step: the loaded index serves them too,
+    # with the same refusal and the same self-contained compact tier
+    anchors = (0, 5, 9)
+    with _pytest.raises(ValueError, match="fingerprint"):
+        _graph_batch_search(
+            spark, corpus, anchors, GRAPH_T_LOW, index=loaded).collect()
+    rows = _graph_batch_search(
+        spark, corpus, anchors, GRAPH_T_LOW, index=loaded,
+        sq_rescore=True).collect()
+    per_q = {a: sum(int(r["qid"]) == a for r in rows) for a in anchors}
+    assert per_q == {a: 10 for a in anchors}, per_q
 
 
 def test_graph_batch_join_form_matches_inlist(spark, monkeypatch):
@@ -1329,7 +1351,9 @@ def test_graph_batch_join_form_matches_inlist(spark, monkeypatch):
     probe drops the literal IN-list and relies on block pruning + the
     broadcast-hash frontier join (VERDICT r9 item 6: a 10k-query batch
     would put ~80k literals in the plan). Forcing the join regime at a
-    small batch must reproduce the IN-list regime's rows exactly."""
+    small batch must reproduce the IN-list regime's rows exactly. With
+    the limit at 0 the batch also leaves the driver-state loop, so this
+    is the differential between the two round loops as well."""
     import neumann_spark.pipeline.ann as ann
     from tests.conftest import SF_DIR
 
@@ -1606,55 +1630,20 @@ def test_run_actions_parallel_refuses_inside_bounded_scope(spark):
     assert spark.conf.get(key) == prior
 
 
-def test_serve_literal_lut_matches_join_form(spark):
-    """The serve loop's ADC lookup (r13) collects the Spark-computed
-    (s, code, d) traversal LUT once and re-embeds it as a flat literal
-    array — this differential pins the element_at form bit-equal to the
-    former broadcast-join form on the fixture index (the doubles
-    round-trip the driver exactly; codes always hit a populated cell)."""
-    import neumann_spark.pipeline.ann as ann
-    from neumann_spark.session import local_df
-    from tests.conftest import SF_DIR
+def test_graph_serve_job_budget(spark):
+    """A single query is a batch of one through the same serving core:
+    warm at sf0.001, `ann_graph_rescore` and the 3-anchor
+    `ann_graph_rescore_batch` each stay within 35 Spark jobs (the parent
+    design ran 19 and 28, paying for them with a per-query literal LUT
+    built one py4j call per cell)."""
+    from neumann_spark.registry import all_queries
+    from tests.conftest import SF_DIR, jobs_run
 
-    index = ann.knn_graph_index(spark, SF_DIR)
-    codes_long, codebooks, u = index[3], index[4], index[5]
-    qv = [float(x) for x in u.filter(
-        F.col("vec_id") == 0).select("embedding").head()[0]]
-    cent_df = local_df(spark,
-        [(s, int(code), [float(x) for x in vals])
-         for s, cb in enumerate(codebooks) for code, vals in cb],
-        "s int, code int, cent array<double>")
-    qslice = F.slice(
-        F.lit(qv), F.col("s") * ann.GRAPH_PQ_SUBDIM + 1,
-        ann.GRAPH_PQ_SUBDIM)
-    lut = cent_df.select(
-        "s", "code",
-        F.round(
-            F.aggregate(
-                F.zip_with(qslice, "cent", lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0), lambda a, x: a + x),
-            6,
-        ).alias("d"))
-    lut_flat = [None] * (ann.GRAPH_PQ_S * ann.GRAPH_PQ_K)
-    for r in lut.collect():
-        lut_flat[r["s"] * ann.GRAPH_PQ_K + r["code"]] = r["d"]
-    lut_d = F.element_at(
-        F.lit(lut_flat),
-        (F.col("s") * ann.GRAPH_PQ_K + F.col("code") + 1).cast("int"))
-    ids = list(range(1, 60))
-    joined = {
-        (int(r["vec_id"]), r["d"])
-        for r in codes_long.filter(F.col("vec_id").isin(ids))
-        .join(F.broadcast(lut), ["s", "code"])
-        .groupBy("vec_id").agg(F.round(F.sum("d"), 6).alias("d")).collect()
-    }
-    literal = {
-        (int(r["vec_id"]), r["d"])
-        for r in codes_long.filter(F.col("vec_id").isin(ids))
-        .select("vec_id", lut_d.alias("d"))
-        .groupBy("vec_id").agg(F.round(F.sum("d"), 6).alias("d")).collect()
-    }
-    assert joined == literal and len(literal) == len(ids)
+    for name in ("ann_graph_rescore", "ann_graph_rescore_batch"):
+        fn = all_queries()[name]
+        fn(spark, SF_DIR).collect()  # warm the session index
+        _, jobs = jobs_run(spark, lambda: fn(spark, SF_DIR).collect())
+        assert jobs <= 35, (name, jobs)
 
 
 def test_lloyd_build_partition_invariant(spark):

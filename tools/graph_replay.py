@@ -1,6 +1,6 @@
 """Shared numpy replay of the engine's round-synchronous graph search.
 
-ONE implementation of `_graph_rescore_from`'s traversal contract (warm
+ONE implementation of `_graph_batch_search`'s traversal contract (warm
 probe selection, rounded ADC grids, (distance, vec_id) tie-breaks,
 frontier expansion, shortlist, rescore) used by BOTH measurement tools —
 tools/ann_recall.py (fixture-scale operating points) and
