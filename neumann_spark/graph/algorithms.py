@@ -6,11 +6,15 @@ Two execution tiers, mirroring how the reference itself splits them:
   connected components `:6898`, label propagation `:7361`, k-core
   `algorithms/kcore.rs:101`, eigenvector `:7278`, triangles
   `algorithms/triangles.rs`, node similarity `algorithms/similarity.rs`) —
-  expressed as bounded loops of join+groupBy over the edges DataFrame with
-  `localCheckpoint()` per round to cut lineage. These scale: each round is
+  expressed as bounded loops of join+groupBy over the edges DataFrame. A
+  round that tests a fixpoint or an empty frontier ends in
+  `model.superstep`: one eager checkpoint job cuts the lineage and returns
+  the round's row count and signature (a label sum, a max), so the test
+  costs no second action and runs every round. These scale: each round is
   one shuffle keyed on node id, so a 1000-executor cluster runs them on
   billions of edges. Fixed iteration counts make them oracle-checkable via
-  unrolled SQL CTEs (generated below).
+  unrolled SQL CTEs (generated below); an early exit at the provable
+  fixpoint returns exactly the fixed-round answer.
 
 * **Small-graph driver-side algorithms** (Tarjan SCC `algorithms/scc.rs:133`,
   Brandes betweenness `lib.rs:7058`, Kruskal MST `algorithms/mst.rs:164`,
@@ -29,7 +33,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neumann_spark.graph.model import GRAPH_SQL_CTE, edges_df, nodes_df, undirected_edges
+from neumann_spark.graph.model import (
+    GRAPH_SQL_CTE, edges_df, nodes_df, superstep, undirected_edges)
 from neumann_spark.registry import register
 from neumann_spark.session import local_df
 
@@ -144,20 +149,18 @@ def connected_components(
     )
     comp = ids.select("id", F.col("id").alias("comp"))
     prev_sig = None
-    for rnd in range(rounds):
-        comp = (
+    for _ in range(rounds):
+        comp, stats = superstep(
             e.join(comp, e.dst == comp.id)
             .groupBy(F.col("src").alias("id"))
-            .agg(F.min("comp").alias("comp"))
+            .agg(F.min("comp").alias("comp")),
+            F.sum("comp").alias("sig"),
         )
-        if rnd % 3 == 2 or rnd == rounds - 1:
-            comp = comp.localCheckpoint(eager=False)
-            # labels only ever decrease, so an unchanged sum IS the fixpoint —
-            # early exit returns exactly the fixed-round oracle's answer
-            sig = comp.agg(F.sum("comp")).collect()[0][0]
-            if sig == prev_sig:
-                break
-            prev_sig = sig
+        # labels only ever decrease, so an unchanged sum IS the fixpoint —
+        # early exit returns exactly the fixed-round oracle's answer
+        if stats["sig"] == prev_sig:
+            break
+        prev_sig = stats["sig"]
     return comp
 
 
@@ -265,25 +268,23 @@ def kcore(
     + two semi-joins; at scale the edge table shrinks monotonically so later
     rounds are cheap. Returns surviving node ids."""
     e = uedges.select("src", "dst").localCheckpoint(eager=False)
-    surv = e.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=False)
-    prev_n = surv.count()
+    surv, stats = superstep(e.select(F.col("src").alias("id")).distinct())
+    prev_n = stats["n"]
     for _ in range(rounds):
         e_in = e.join(surv.withColumnRenamed("id", "src"), "src", "left_semi").join(
             surv.withColumnRenamed("id", "dst"), "dst", "left_semi"
         )
-        surv = (
+        surv, stats = superstep(
             e_in.groupBy("src")
             .agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= k)
             .select(F.col("src").alias("id"))
-            .localCheckpoint(eager=False)
         )
-        n = surv.count()
         # survivors shrink monotonically: stable count ⇒ fixpoint ⇒ identical
         # to the fully-unrolled oracle
-        if n == prev_n:
+        if stats["n"] == prev_n:
             break
-        prev_n = n
+        prev_n = stats["n"]
     return surv
 
 
@@ -319,17 +320,17 @@ def eigenvector_centrality(
 ) -> DataFrame:
     """Eigenvector centrality by power iteration
     (`graph_engine/src/lib.rs:7278`): ev ← A·ev, normalized by max each
-    round. One shuffle per round + a scalar max (driver aggregate)."""
+    round. One shuffle per round; the round's max rides its checkpoint job."""
     e = uedges.select("src", "dst").localCheckpoint(eager=False)
     nodes_c = nodes.select("id").localCheckpoint(eager=False)
     ev = nodes_c.select("id", F.lit(1.0).alias("ev"))
     for _ in range(iters):
-        raw = (
-            e.join(ev, e.dst == ev.id).groupBy("src").agg(F.sum("ev").alias("raw"))
-        ).localCheckpoint(eager=False)
-        mx = raw.agg(F.max("raw")).collect()[0][0] or 1.0
+        raw, stats = superstep(
+            e.join(ev, e.dst == ev.id).groupBy("src").agg(F.sum("ev").alias("raw")),
+            F.max("raw").alias("mx"),
+        )
         ev = nodes_c.join(raw, nodes_c.id == raw.src, "left").select(
-            "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(mx)).alias("ev")
+            "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(stats["mx"] or 1.0)).alias("ev")
         )
     return ev
 
@@ -1519,7 +1520,7 @@ def betweenness_distributed(
     frontier = visited
     levels = [frontier]
     for depth in range(1, max_depth + 1):
-        nxt = (
+        nxt, stats = superstep(
             frontier.join(e, frontier.node == e.src)
             .groupBy("source", F.col("dst").alias("node2"))
             .agg(F.sum("sigma").alias("sigma"))
@@ -1530,9 +1531,8 @@ def betweenness_distributed(
                 "sigma",
             )
             .join(visited.select("source", "node"), ["source", "node"], "left_anti")
-            .localCheckpoint(eager=False)
         )
-        if nxt.isEmpty():
+        if stats["n"] == 0:
             break
         # visited is only ever anti-joined against; as a union of already-
         # checkpointed levels its lineage stays shallow — no extra job here
@@ -1829,9 +1829,10 @@ def scc_distributed(
       3. marked SCCs are assigned and removed.
 
     Everything is joins + groupBy on node ids — one shuffle per step, no
-    driver collect; fixpoints detected by a monotone signature (sum of
-    labels) like `connected_components`. Returns (id, scc) with scc = min
-    member, all components including singletons.
+    driver collect; step 1 IS `connected_components` over the reversed
+    edges, and every emptiness test reads the row count its `superstep`
+    returns. Returns (id, scc) with scc = min member, all components
+    including singletons.
 
     A standard TRIM pass runs first (McLendon et al. FW-BW-Trim): nodes
     with no in-edges or no out-edges inside the remaining subgraph are
@@ -1843,12 +1844,12 @@ def scc_distributed(
     distributed-SCC implementation."""
     e_all = dedges.select("src", "dst").distinct().localCheckpoint(eager=False)
     spark = dedges.sparkSession
-    remaining = (
+    remaining, stats = superstep(
         e_all.select(F.col("src").alias("id"))
         .unionAll(e_all.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
+    n_left = stats["n"]
     assigned = local_df(spark, [], "id bigint, scc bigint")
     # TRIM: peel nodes that cannot be in a cycle of the remaining subgraph
     e_t = e_all
@@ -1856,9 +1857,11 @@ def scc_distributed(
         srcs = e_t.select(F.col("src").alias("id")).distinct()
         dsts = e_t.select(F.col("dst").alias("id")).distinct()
         core = srcs.join(dsts, "id", "left_semi").localCheckpoint(eager=False)
-        trimmed = remaining.join(core, "id", "left_anti")
-        if trimmed.isEmpty():
+        trimmed, stats = superstep(remaining.join(core, "id", "left_anti"))
+        if stats["n"] == 0:
             break
+        # core ⊆ remaining, so the peeled rows are exactly remaining − core
+        n_left -= stats["n"]
         assigned = assigned.unionAll(
             trimmed.select("id", F.col("id").alias("scc")))
         remaining = core
@@ -1869,45 +1872,27 @@ def scc_distributed(
         )
     assigned = assigned.localCheckpoint(eager=False)
     for _ in range(max_outer):
-        if remaining.isEmpty():
+        if n_left == 0:
             break
         e = (
             e_all.join(remaining.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(remaining.withColumnRenamed("id", "dst"), "dst", "left_semi")
             .localCheckpoint(eager=False)
         )
-        # 1. forward min propagation
-        color = remaining.select("id", F.col("id").alias("color"))
-        prev_sig = None
-        for rnd in range(max_inner):
-            upd = (
-                e.join(color, e.src == color.id)
-                .groupBy("dst")
-                .agg(F.min("color").alias("c2"))
-            )
-            color = (
-                color.join(upd, color.id == upd.dst, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("color"), F.coalesce("c2", F.col("color"))
-                    ).alias("color"),
-                )
-            )
-            if rnd % 3 == 2:
-                color = color.localCheckpoint(eager=False)
-                sig = color.agg(F.sum("color")).collect()[0][0]
-                if sig == prev_sig:
-                    break
-                prev_sig = sig
-        color = color.localCheckpoint(eager=False)
+        # 1. forward min propagation: min-label fixpoint over the reversed
+        # edges, so each node takes the min colour of its in-neighbours
+        color = connected_components(
+            remaining,
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            rounds=max_inner,
+        ).withColumnRenamed("comp", "color")
         # 2. backward marking within each color class from the pivot
         marked = color.filter(F.col("id") == F.col("color")).select(
             "id", F.col("color").alias("scc")
         )
         frontier = marked
         for _ in range(max_inner):
-            nxt = (
+            nxt, stats = superstep(
                 e.join(frontier, e.dst == frontier.id)
                 .select(F.col("src").alias("id"), "scc")
                 .dropDuplicates(["id"])
@@ -1917,19 +1902,18 @@ def scc_distributed(
                     "left_semi",
                 )
                 .join(marked.select("id"), "id", "left_anti")
-                .localCheckpoint(eager=False)
             )
-            if nxt.isEmpty():
+            if stats["n"] == 0:
                 break
             marked = marked.unionAll(nxt)
             frontier = nxt
         marked = marked.localCheckpoint(eager=False)
         assigned = assigned.unionAll(marked)
-        remaining = remaining.join(marked.select("id"), "id", "left_anti").localCheckpoint(
-            eager=True
-        )
+        remaining, stats = superstep(
+            remaining.join(marked.select("id"), "id", "left_anti"))
+        n_left = stats["n"]
     else:
-        if not remaining.isEmpty():
+        if n_left:
             raise ValueError(f"SCC coloring did not converge in {max_outer} rounds")
     return assigned
 
@@ -1960,7 +1944,7 @@ def mst_boruvka_distributed(
     )
     chosen = local_df(spark, [], "src bigint, dst bigint, weight double")
     for _ in range(max_rounds):
-        e2 = (
+        e2, stats = superstep(
             ce.join(
                 comp.select(F.col("id").alias("src"), F.col("comp").alias("cs")),
                 "src",
@@ -1970,13 +1954,8 @@ def mst_boruvka_distributed(
                 "dst",
             )
             .filter(F.col("cs") != F.col("cd"))
-            # lazy checkpoints throughout this loop (guide §5): the next
-            # action (isEmpty here, the per-round convergence collect for
-            # lbl) materializes the truncated plan inside its own job, so
-            # each round costs one driver action, not two
-            .localCheckpoint(eager=False)
         )
-        if e2.isEmpty():
+        if stats["n"] == 0:
             break
         key = F.struct(
             F.col("weight").alias("w"), F.col("src").alias("s"), F.col("dst").alias("d")
@@ -2013,21 +1992,20 @@ def mst_boruvka_distributed(
             .select("c", F.col("c").alias("l"))
         )
         prev_sig = None
-        for rnd in range(max_cc):
+        for _ in range(max_cc):
             upd = (
                 cpairs.join(lbl, cpairs.cb == lbl.c)
                 .groupBy("ca")
                 .agg(F.min("l").alias("l2"))
             )
-            lbl = (
-                lbl.join(upd, lbl.c == upd.ca, "left")
-                .select("c", F.least(F.col("l"), F.coalesce("l2", F.col("l"))).alias("l"))
-                .localCheckpoint(eager=False)
+            lbl, stats = superstep(
+                lbl.join(upd, lbl.c == upd.ca, "left").select(
+                    "c", F.least(F.col("l"), F.coalesce("l2", F.col("l"))).alias("l")),
+                F.sum("l").alias("sig"),
             )
-            sig = lbl.agg(F.sum("l")).collect()[0][0]
-            if sig == prev_sig:
+            if stats["sig"] == prev_sig:
                 break
-            prev_sig = sig
+            prev_sig = stats["sig"]
         comp = (
             comp.join(lbl, comp.comp == lbl.c, "left")
             .select("id", F.coalesce("l", F.col("comp")).alias("comp"))
@@ -2137,16 +2115,15 @@ def bcc_distributed(
     frontier = visited
     forest = local_df(spark, [], "child bigint, parent bigint, depth int")
     for depth in range(1, max_depth + 2):
-        nxt = (
+        nxt, stats = superstep(
             e.join(frontier.withColumnRenamed("id", "src"), "src")
             .select(F.col("dst").alias("child"), F.col("src").alias("parent"))
             .join(visited.withColumnRenamed("id", "child"), "child", "left_anti")
             .groupBy("child")
             .agg(F.min("parent").alias("parent"))
             .withColumn("depth", F.lit(depth))
-            .localCheckpoint(eager=False)
         )
-        if nxt.isEmpty():
+        if stats["n"] == 0:
             break
         if depth > max_depth:
             raise ValueError(
@@ -2167,7 +2144,7 @@ def bcc_distributed(
     dep = forest.select(F.col("child").alias("id"), "depth").unionAll(
         roots.select("id", F.lit(0).alias("depth"))
     )
-    state = (
+    state, stats = superstep(
         canon.join(tree_canon, ["src", "dst"], "left_anti")
         .join(
             dep.select(F.col("id").alias("src"), F.col("depth").alias("da")), "src"
@@ -2184,14 +2161,13 @@ def bcc_distributed(
             F.lit(None).cast("bigint").alias("la"),
             F.lit(None).cast("bigint").alias("lb"),
         )
-        .localCheckpoint(eager=False)
     )
     coverage = local_df(spark, [], "child bigint")
     aux = local_df(spark, [], "x bigint, y bigint")
     pa = forest.select(F.col("child").alias("a"), F.col("parent").alias("p_a"))
     pb = forest.select(F.col("child").alias("b"), F.col("parent").alias("p_b"))
     for _ in range(2 * max_depth + 2):
-        if state.isEmpty():
+        if stats["n"] == 0:
             break
         lift_a = F.col("da") >= F.col("db")
         lift_b = F.col("db") >= F.col("da")
@@ -2227,7 +2203,7 @@ def bcc_distributed(
             .select(F.col("la").alias("x"), F.col("lb").alias("y"))
         ).localCheckpoint(eager=False)
         coverage = coverage.localCheckpoint(eager=False)
-        state = state.filter(F.col("a") != F.col("b")).localCheckpoint(eager=False)
+        state, stats = superstep(state.filter(F.col("a") != F.col("b")))
     else:
         raise ValueError(f"LCA walks did not converge in {2 * max_depth + 2} rounds")
 
@@ -2418,20 +2394,16 @@ def core_decomposition(
             .groupBy("src")
             .agg(F.max(F.least(F.col("rn"), F.col("nc"))).alias("h"))
         )
-        # lazy checkpoint: the signature collect right after materializes it
-        # in the same job — one action per round, not two
-        core = (
-            core.join(h, core.id == h.src, "left")
-            .select(
+        core, stats = superstep(
+            core.join(h, core.id == h.src, "left").select(
                 "id",
                 F.least(F.col("core"), F.coalesce("h", F.lit(0))).alias("core"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            F.sum("core").alias("sig"),
         )
-        sig = core.agg(F.sum("core")).collect()[0][0]
-        if sig == prev_sig:
+        if stats["sig"] == prev_sig:
             break
-        prev_sig = sig
+        prev_sig = stats["sig"]
     return core
 
 

@@ -25,7 +25,7 @@ identical graph from the same parquet:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from neumann_spark.catalog import load
@@ -182,41 +182,15 @@ def undirected_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def aggregate_messages(
-    edges: DataFrame,
-    vertex_state: DataFrame,
-    msg_to_dst=None,
-    msg_to_src=None,
-    agg=None,
-):
-    """Pregel-style aggregateMessages on DataFrames (the GraphX primitive the
-    north star names; every iterative algorithm in `graph.algorithms` is an
-    instance of this pattern):
+def superstep(df: DataFrame, *aggs: Column) -> tuple[DataFrame, dict]:
+    """One superstep of an iterative graph loop, in the Pregelix shape: the
+    round's frame is checkpointed (lineage cut) by ONE eager job, and that
+    same job returns the round's statistics through an `Observation` —
+    `n` (row count) plus every named aggregate in `aggs`. A loop's fixpoint
+    or emptiness test reads them instead of running a second scalar action
+    (`count()`, `isEmpty()`, `agg(...).collect()`).
 
-      edges(src, dst, …) ⋈ vertex_state(id, …) → per-edge messages → groupBy
-      destination vertex → aggregated inbox.
-
-    `msg_to_dst` / `msg_to_src` are Column expressions over the joined
-    (edge ⋈ state-of-other-endpoint) row; `agg` is the reduce expression
-    applied to column `msg` (default sum). Returns (id, agg). One shuffle
-    keyed on vertex id — identical cost shape to GraphX aggregateMessages."""
-    from pyspark.sql import functions as F
-
-    agg = agg if agg is not None else F.sum("msg")
-    parts = []
-    if msg_to_dst is not None:
-        parts.append(
-            edges.join(vertex_state, edges.src == vertex_state.id)
-            .select(edges.dst.alias("vid"), msg_to_dst.alias("msg"))
-        )
-    if msg_to_src is not None:
-        parts.append(
-            edges.join(vertex_state, edges.dst == vertex_state.id)
-            .select(edges.src.alias("vid"), msg_to_src.alias("msg"))
-        )
-    if not parts:
-        raise ValueError("need msg_to_dst and/or msg_to_src")
-    inbox = parts[0]
-    for p in parts[1:]:
-        inbox = inbox.unionAll(p)
-    return inbox.groupBy(F.col("vid").alias("id")).agg(agg.alias("agg"))
+    Returns (checkpointed frame, {"n": rows, <alias>: value, ...})."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n"), *aggs).localCheckpoint(eager=True)
+    return out, obs.get

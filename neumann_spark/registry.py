@@ -11,6 +11,9 @@ algorithms) register without an oracle → the driver records a rows-only check.
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 from typing import Optional
 
@@ -20,6 +23,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryFn]:
@@ -36,106 +40,37 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Que
     return deco
 
 
-# Driver-evidence priority order. The correctness driver checks queries in
-# the order `queries()` yields them, under a fixed budget (empirically the
-# first ~50). Registration order is module-import order (cheapest modules
-# first), so without this list the same cheap window would be re-sampled
-# every round. Each round the list is rotated toward never-driver-sampled
-# queries; queries not listed keep their registration order after these.
-#
-# Round-13 rotation (per the r12 ROTATION NOTE): there are no r12 reds.
-# Position 1 is ann_graph_autobudget_law — its surface changed in r12
-# (nnd_rounds column + uncapped shortlist) and the r12 driver budget cut
-# before its slot 51, so it front-loads. Then the ENTIRE 47-name
-# r9-evidence tier (newest driver evidence r9 by the CORRECTNESS_r*
-# union: text_* pipeline queries, geo, the vector brute/filtered kNN
-# family, CSV/JSON/ORC sinks, curation, joins core incl. as-of,
-# streaming windows, the batch/churn ANN serving family) — the ~50
-# driver budget covers 1+47 with ~2 slots of spill, so the evidence
-# floor rises to r10. The spill tail is r10 names whose surface this
-# round TOUCHED (persist layout gained shard-telemetry columns; the
-# auto-serving family reads graph_meta): ann_index_persist_roundtrip
-# first, then the auto/IVF serving names.
-#
-# ROTATION NOTE (next round, r14): front-load any r13 reds, then the
-# remaining r10-evidence tier (~45 names after the r13 spill: dedup ×7,
-# cypher ×4, unified ×4, graph distributed twins + Louvain/Boruvka/
-# betweenness, snapshots/WAL, DDL/FK/cursor/checkpoint, IVF-PQ presets,
-# multimodal, pipeline curation), then r11 names in r15.
-_PRIORITY: list[str] = [
-    # (a) changed-surface + budget-cut carryover, first
-    "ann_graph_autobudget_law",
-    # (b) the full r9-evidence tier (alphabetical)
-    "ann_filtered_auto_loose",
-    "ann_filtered_auto_tight",
-    "ann_graph_batch_compact",
-    "ann_graph_batch_filtered",
-    "ann_graph_churn_search",
-    "geo_bbox_search",
-    "geo_knn",
-    "geo_radius_search",
-    "graph_geo_distance",
-    "hybrid_rrf_connected",
-    "join_anti",
-    "join_cross",
-    "join_full",
-    "join_inner",
-    "join_left",
-    "join_natural",
-    "join_right",
-    "join_semi",
-    "pipeline_chunk_documents",
-    "pipeline_length_buckets",
-    "pipeline_sequence_packing",
-    "pipeline_stratified_sample",
-    "rel_asof_join",
-    "source_csv_roundtrip",
-    "source_json_roundtrip",
-    "source_orc_roundtrip",
-    "stream_dedup",
-    "stream_live_windowed_counts",
-    "stream_session_window",
-    "stream_sliding_window",
-    "stream_stateful_counts",
-    "stream_stream_join",
-    "stream_tumbling_window",
-    "text_fingerprint",
-    "text_gopher_quality_rules",
-    "text_language_id",
-    "text_quality_score",
-    "text_repetition_signals",
-    "text_token_count",
-    "text_unigram_logprob",
-    "vector_collection_stats",
-    "vector_filtered_knn",
-    "vector_knn_cosine",
-    "vector_knn_dot",
-    "vector_knn_euclidean",
-    "vector_pairwise_similarity",
-    "vector_sparse_similarity",
-    # (c) touched-surface r10 spill (persist layout + auto serving)
-    "ann_index_persist_roundtrip",
-    "ann_graph_batch_auto",
-    "ann_graph_rescore_auto",
-    "ann_ivf_search",
-    "ann_ivfpq_rescore",
-]
+def _last_checked(root: str) -> dict[str, int]:
+    """Query name -> the newest correctness round (`CORRECTNESS_r<N>.json`
+    under `root`) that checked it."""
+    last: dict[str, int] = {}
+    for fname in os.listdir(root):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m:
+            with open(os.path.join(root, fname)) as f:
+                for name in json.load(f):
+                    last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
 
 
-def _prioritized(names: dict[str, object]) -> list[str]:
-    """Order query names: _PRIORITY entries first, then registration order."""
-    listed = [n for n in _PRIORITY if n in names]
-    rest = [n for n in names if n not in set(_PRIORITY)]
-    return listed + rest
+def _prioritized(names: dict[str, object], root: str = _REPO_ROOT) -> list[str]:
+    """Driver-evidence order. The correctness driver checks queries in the
+    order `queries()` yields them under a fixed budget (~50), so the least
+    recently checked come first: never-checked names, then by their last
+    `CORRECTNESS_r<N>.json` round, oldest first. Ties (and every name, when
+    no such file exists) keep registration order."""
+    last = _last_checked(root)
+    return sorted(names, key=lambda n: last.get(n, 0))
 
 
 def _import_all() -> None:
     """Import every query-bearing module (side effect: registration).
 
-    Order = driver execution order, cheapest modules first: the driver's
-    correctness budget should cover as many queries as possible before it
-    reaches the iterative graph algorithms, which dominate wall-time at
-    fixture scale (per-job overhead, not data volume)."""
+    Order = registration order, the tie-break of `_prioritized`: cheapest
+    modules first, so among equally stale names the driver's correctness
+    budget covers as many queries as possible before it reaches the
+    iterative graph algorithms, which dominate wall-time at fixture scale
+    (per-job overhead, not data volume)."""
     from neumann_spark.pipeline import curation, text_queries  # noqa: F401
     from neumann_spark.sources import formats  # noqa: F401
     from neumann_spark.functions import geo, vector  # noqa: F401

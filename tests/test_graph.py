@@ -137,13 +137,41 @@ def test_pagerank_matches_recurrence(spark):
     assert got[4] == (1 - DAMPING) / len(ids)
 
 
+def test_superstep_observes_its_checkpoint_job(spark):
+    """`superstep` returns the input's rows, and its `n` and named
+    aggregates equal a separate `agg().collect()`; they come from the
+    checkpoint's own job, so with AQE off the call runs exactly as many
+    jobs as `localCheckpoint(eager=True)` alone."""
+    from neumann_spark.graph.model import superstep
+
+    df = (spark.range(200).groupBy((F.col("id") % 7).alias("k"))
+          .agg(F.sum("id").alias("s")))
+    aggs = (F.sum("s").alias("sig"), F.max("k").alias("mx"))
+    prior = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        (out, stats), jobs = jobs_run(spark, lambda: superstep(df, *aggs))
+        _, plain = jobs_run(spark, lambda: df.localCheckpoint(eager=True))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prior)
+    assert jobs == plain
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
+    assert stats == df.agg(F.count(F.lit(1)).alias("n"), *aggs).collect()[0].asDict()
+    assert superstep(df.filter(F.col("k") > 7))[1] == {"n": 0}
+
+
 def test_graph_loop_job_budget(spark):
-    """Each BFS level and CC round reads its state once: warm runs at
-    sf0.001 stay within 16 jobs (BFS, depth 3) and 36 jobs (CC, 12 rounds
-    with a fixpoint check every 3)."""
+    """Each loop round reads its state once and tests its fixpoint or
+    emptiness inside its checkpoint job: warm runs at sf0.001 stay within
+    these job counts (the parent, which ran a separate scalar action per
+    test, needed BFS 12, CC 31, k-core 24, core decomposition 45,
+    eigenvector 55, SCC 141, Borůvka 128)."""
     from neumann_spark.registry import all_queries
 
-    for name, budget in [("graph_bfs_levels", 16), ("graph_connected_components", 36)]:
+    for name, budget in [("graph_bfs_levels", 16), ("graph_connected_components", 29),
+                         ("graph_kcore", 18), ("graph_core_decomposition", 38),
+                         ("graph_eigenvector", 47), ("graph_scc_distributed", 127),
+                         ("graph_mst_boruvka", 118)]:
         fn = all_queries()[name]
         fn(spark, SF_DIR).collect()  # warm the session graph and caches
         _, jobs = jobs_run(spark, lambda: fn(spark, SF_DIR).collect())
@@ -159,11 +187,14 @@ def _oracle_check(spark, duck, name):
 
 
 @pytest.mark.parametrize("name", [
-    "graph_bfs_levels", "graph_pagerank", "graph_connected_components"])
+    "graph_bfs_levels", "graph_pagerank", "graph_connected_components",
+    "graph_eigenvector", "graph_core_decomposition", "graph_scc_distributed",
+    "graph_mst_boruvka"])
 def test_graph_loops_match_oracle_across_partitions(spark, duck, name):
-    """The headline graph loops hash-match their oracles whatever the
-    shuffle-partition count or AQE setting (PageRank's double `F.sum` is
-    where partition order could leak into the rounded result)."""
+    """The graph loops hash-match their oracles whatever the
+    shuffle-partition count or AQE setting (PageRank's and eigenvector's
+    double `F.sum` is where partition order could leak into the rounded
+    result)."""
     keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     prior = {key: spark.conf.get(key) for key in keys}
     try:
@@ -226,22 +257,6 @@ def test_scc_finds_cycles(spark):
 
     sizes = Counter(r["scc"] for r in out)
     assert all(v >= 2 for v in sizes.values())
-
-
-def test_aggregate_messages_degree_and_weight(spark):
-    """aggregate_messages computes weighted in-degree = sum of incoming
-    edge weights times source state."""
-    from neumann_spark.graph.model import aggregate_messages
-
-    edges = _edges(spark, [(1, 2), (1, 3), (2, 3)])
-    state = spark.createDataFrame([(1, 2.0), (2, 10.0), (3, 0.0)], "id bigint, x double")
-    out = {
-        r["id"]: r["agg"]
-        for r in aggregate_messages(
-            edges, state, msg_to_dst=F.col("x") * F.col("weight")
-        ).collect()
-    }
-    assert out == {2: 2.0, 3: 12.0}
 
 
 def test_approx_distinct_error_bound(spark):

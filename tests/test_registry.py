@@ -103,3 +103,27 @@ def test_tool_imports_resolve():
     assert not missing, missing
     # the guard must actually see the ANN tools' attribute reads
     assert sum(m == "neumann_spark.pipeline.ann" for _, m, _ in checked) > 20
+
+
+def test_prioritized_rotates_least_recently_checked_first(tmp_path):
+    """The driver sample rotates itself from the committed correctness
+    rounds: never-checked names first, then by their newest checking round
+    (oldest first); ties keep registration order, and with no round files
+    the order is registration order."""
+    import json
+
+    from neumann_spark.registry import _prioritized
+
+    names = dict.fromkeys(["a", "b", "c", "d", "e", "f"])
+    assert _prioritized(names, str(tmp_path)) == list(names)
+    rounds = {"CORRECTNESS_r01.json": ["a", "b", "c"],
+              "CORRECTNESS_r02.json": ["a", "d"],
+              "CORRECTNESS_r10.json": ["c"],
+              "CORRECTNESS_r9.json": ["b", "gone"],
+              "CORRECTNESS_r09_c8.json": ["e"],
+              "BENCH_r11.json": ["f"]}
+    for fname, checked in rounds.items():
+        (tmp_path / fname).write_text(json.dumps(dict.fromkeys(checked, {})))
+    # e, f: no matching round file; a, d: r02 (tie); b: r9 (numeric, not
+    # lexical, round order); c: r10
+    assert _prioritized(names, str(tmp_path)) == ["e", "f", "a", "d", "b", "c"]

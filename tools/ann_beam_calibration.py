@@ -13,13 +13,14 @@ corpora), replay-only, no rebuild — whether equal-budget wide
   log-rounds points the proposed derivation picks, e.g. (13, 64, 32)
   at 65K, plus neighbours to locate which lever (beam vs C) carries.
 
-Usage: python tools/ann_beam_calibration.py [N] [n_queries]
+Usage: python tools/ann_beam_calibration.py [N] [n_queries] [--dir DIR]
 Prints one JSON line per cell; does not write ANN_RECALL.json (the
 final law re-measures through tools/ann_scale_recall.py).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -32,15 +33,22 @@ TOPK = 10
 
 
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 65536
-    n_q = int(sys.argv[2]) if len(sys.argv) > 2 else 50
+    from tools.ann_scale_recall import SCALE_ROOT, scale_dir
+
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("n", nargs="?", type=int, default=65536)
+    ap.add_argument("n_q", nargs="?", type=int, default=50)
+    ap.add_argument("--dir", default=SCALE_ROOT,
+                    help="root of the scale corpora (default /tmp)")
+    args = ap.parse_args()
+    n, n_q = args.n, args.n_q
 
     import neumann_spark.pipeline.ann as ann
     from neumann_spark.session import get_spark
     from tools.graph_replay import (export_index_arrays, make_graph_search,
                                     sq_dequant_matrix)
 
-    sf_dir = f"/tmp/ann_scale_{n}"
+    sf_dir = scale_dir(n, args.dir)
     idx_dir = os.path.join(sf_dir, "index_wkauto")
     assert os.path.exists(os.path.join(idx_dir, "graph_meta")), idx_dir
 

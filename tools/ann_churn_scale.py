@@ -6,7 +6,7 @@ fixture-scale churn pin (`test_graph_churn_drift_bounded`) now gets a
 10x-scale measurement through the SAME registered maintenance paths:
 
 1. Load the persisted N=20,000 index (built by tools/ann_scale_recall.py
-   under /tmp/ann_scale_20000/index_wkauto) and attach the corpus unit
+   under <--dir>/ann_scale_20000/index_wkauto) and attach the corpus unit
    frame (the loaded tuple's element 5 is None by design).
 2. Cycle FIVE disjoint 10% slices (vec_id % 10 == c) through
    knn_graph_delete -> knn_graph_insert — 50% cumulative churn, the
@@ -19,13 +19,14 @@ fixture-scale churn pin (`test_graph_churn_drift_bounded`) now gets a
    knobs the presets would serve with.
 5. Merge a `churn_scale_runs` block into ANN_RECALL.json.
 
-Usage: python tools/ann_churn_scale.py [N] [n_queries]
+Usage: python tools/ann_churn_scale.py [N] [n_queries] [--dir DIR]
   (N defaults to 20000; the corpus+index must exist — run
-   tools/ann_scale_recall.py N first.)
+   tools/ann_scale_recall.py N [--dir DIR] first.)
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -39,9 +40,16 @@ TOPK = 10
 
 
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-    n_q = int(sys.argv[2]) if len(sys.argv) > 2 else 40
-    sf_dir = f"/tmp/ann_scale_{n}"
+    from tools.ann_scale_recall import SCALE_ROOT, scale_dir
+
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("n", nargs="?", type=int, default=20000)
+    ap.add_argument("n_q", nargs="?", type=int, default=40)
+    ap.add_argument("--dir", default=SCALE_ROOT,
+                    help="root of the scale corpora (default /tmp)")
+    args = ap.parse_args()
+    n, n_q = args.n, args.n_q
+    sf_dir = scale_dir(n, args.dir)
     idx_dir = os.path.join(sf_dir, "index_wkauto")
     assert os.path.exists(os.path.join(idx_dir, "graph_meta")), (
         f"run tools/ann_scale_recall.py {n} first")

@@ -28,15 +28,19 @@ baselines, plus filtered post-recall at the auto budget (the dispatch's
 post branch). The built index is persisted under the corpus dir and
 reloaded on re-runs, which also exercises save/load at scale.
 
-Usage: python tools/ann_scale_recall.py [N] [n_queries] [warm_k]
+Usage: python tools/ann_scale_recall.py [N] [n_queries] [warm_k] [--dir DIR]
   N          corpus size (default 20000)
   n_queries  query anchors, evenly spaced (default 100)
   warm_k     0 = auto (graph_auto_warm_k(N), the shipped policy);
              otherwise a build-time override for contrast runs.
+  --dir DIR  where the corpus and its persisted indexes live, as
+             DIR/ann_scale_<N> (default /tmp); the other scale tools
+             take the same flag.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -49,14 +53,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 TOPK = 10
 SEED = 42
 DIMS = 64
+SCALE_ROOT = "/tmp"
 
 
-def gen_corpus(n: int) -> str:
+def scale_dir(n: int, root: str = SCALE_ROOT) -> str:
+    """The size-`n` scale corpus and its persisted indexes."""
+    return os.path.join(root, f"ann_scale_{n}")
+
+
+def gen_corpus(n: int, root: str = SCALE_ROOT) -> str:
     """Write the deterministic synthetic corpus parquet; return its dir."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = f"/tmp/ann_scale_{n}"
+    d = scale_dir(n, root)
     path = os.path.join(d, "embeddings.parquet")
     if os.path.exists(path):
         return d
@@ -82,11 +92,15 @@ def gen_corpus(n: int) -> str:
 
 
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-    n_q = int(sys.argv[2]) if len(sys.argv) > 2 else 100
-    warm_k = int(sys.argv[3]) if len(sys.argv) > 3 else 0
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("n", nargs="?", type=int, default=20000)
+    ap.add_argument("n_q", nargs="?", type=int, default=100)
+    ap.add_argument("warm_k", nargs="?", type=int, default=0)
+    ap.add_argument("--dir", default=SCALE_ROOT)
+    args = ap.parse_args()
+    n, n_q, warm_k = args.n, args.n_q, args.warm_k
 
-    sf_dir = gen_corpus(n)
+    sf_dir = gen_corpus(n, args.dir)
 
     import neumann_spark.pipeline.ann as ann
     from neumann_spark.session import get_spark

@@ -11,7 +11,7 @@ preset), against the same query served at the r10 frozen-width law's
 knobs (caps pinned to (C=16, beam<=32), rounds carrying the whole
 N^0.85 budget) through the same `_graph_rescore_from` core.
 
-Method: load the persisted index from /tmp/ann_scale_<N>/index_wkauto
+Method: load the persisted index from <--dir>/ann_scale_<N>/index_wkauto
 (built by tools/ann_scale_recall.py), one untimed warmup query per arm
 (absorbs session/code-path warmup and the once-per-(index, corpus)
 loaded-rescore validation), then `n_queries` timed single queries on
@@ -19,7 +19,7 @@ distinct anchors; report per-arm median and min. Also records the
 derived knobs so the latency difference is attributable: same budget,
 same recall band, different split.
 
-Usage: python tools/ann_serving_latency.py [N ...] [--queries M]
+Usage: python tools/ann_serving_latency.py [N ...] [--queries M] [--dir DIR]
 Merges a `serving_latency` block into ANN_RECALL.json.
 """
 
@@ -54,6 +54,8 @@ def main() -> None:
     # the --queries VALUE into the corpus-size list), then positionals
     import argparse
 
+    from tools.ann_scale_recall import SCALE_ROOT, scale_dir
+
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("ns", nargs="*", type=int, default=[65536],
                     metavar="N", help="corpus sizes (default 65536)")
@@ -67,6 +69,8 @@ def main() -> None:
                          "record the shipped configuration's absolute "
                          "latency and leave the split contrast to the "
                          "65K row")
+    ap.add_argument("--dir", default=SCALE_ROOT,
+                    help="root of the scale corpora (default /tmp)")
     args = ap.parse_args()
     ns = args.ns or [65536]
     n_q = args.queries + 1  # +1: first query per arm is untimed warmup
@@ -77,7 +81,7 @@ def main() -> None:
     spark = get_spark("ann_serving_latency")
     results = []
     for n in ns:
-        sf_dir = f"/tmp/ann_scale_{n}"
+        sf_dir = scale_dir(n, args.dir)
         idx_dir = os.path.join(sf_dir, "index_wkauto")
         if not os.path.exists(os.path.join(idx_dir, "graph_meta")):
             print(f"no persisted index at {idx_dir} — run "

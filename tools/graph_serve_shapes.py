@@ -15,6 +15,13 @@ tree.
     batch_300_filtered
                       300 anchors with the allow list
 
+With `--queries NAME,...` a pass times registered queries instead of the
+serving shapes: it runs the list twice, in the order given. The first
+round's `collect()`s (the first builds the session graph; per-session
+caches such as the biconnectivity index fill) are recorded as `first_*`;
+wall, Spark jobs and a row hash come from the second round, so every warm
+run starts in an equally warmed-up JVM.
+
 Usage:
     python tools/graph_serve_shapes.py [--root DIR] [--sf DIR]
         one pass, importing `neumann_spark` from DIR (default: this
@@ -24,6 +31,9 @@ Usage:
         and runs N alternating base/working-tree pass pairs, each in a
         fresh process; writes GRAPH_SERVE_AB.json with per-shape walls,
         jobs, hashes and the head/base median ratio
+    python tools/graph_serve_shapes.py --ab BASE_REF --queries NAME,...
+        the same A/B over registered queries (e.g. at --sf .../sf0.01);
+        writes GRAPH_LOOPS_AB.json
 """
 
 from __future__ import annotations
@@ -96,13 +106,42 @@ def one_pass(root: str, sf: str) -> dict:
         jobs0, t0 = sched.nextJobId(), time.perf_counter()
         rows = run(spark, sf, index)
         wall = time.perf_counter() - t0
-        digest = hashlib.md5(
-            "\n".join(repr(r) for r in sorted(rows)).encode()).hexdigest()
         out[name] = {"wall_s": round(wall, 3),
                      "jobs": sched.nextJobId() - jobs0,
-                     "rows": len(rows), "hash": digest}
+                     "rows": len(rows), "hash": _digest(rows)}
     spark.stop()
     return out
+
+
+def queries_pass(root: str, sf: str, names: list[str]) -> dict:
+    sys.path.insert(0, root)
+    import neumann_spark.registry as registry
+    from neumann_spark.session import get_spark
+
+    assert registry.__file__.startswith(root + os.sep), (registry.__file__, root)
+
+    spark = get_spark("graph_loop_queries")
+    spark.sparkContext.setLogLevel("ERROR")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    queries = registry.all_queries()
+    out = {}
+    for name in names:
+        jobs0, t0 = sched.nextJobId(), time.perf_counter()
+        queries[name](spark, sf).collect()
+        out[name] = {"first_wall_s": round(time.perf_counter() - t0, 3),
+                     "first_jobs": sched.nextJobId() - jobs0}
+    for name in names:
+        jobs0, t0 = sched.nextJobId(), time.perf_counter()
+        rows = [tuple(r) for r in queries[name](spark, sf).collect()]
+        wall = time.perf_counter() - t0
+        out[name].update(wall_s=round(wall, 3), jobs=sched.nextJobId() - jobs0,
+                         rows=len(rows), hash=_digest(rows))
+    spark.stop()
+    return out
+
+
+def _digest(rows: list) -> str:
+    return hashlib.md5("\n".join(repr(r) for r in sorted(rows)).encode()).hexdigest()
 
 
 def _git(*args: str) -> str:
@@ -110,16 +149,17 @@ def _git(*args: str) -> str:
                           capture_output=True, text=True).stdout.strip()
 
 
-def _pass_in_child(root: str, sf: str) -> dict:
-    res = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--root", root,
-         "--sf", sf], capture_output=True, text=True)
+def _pass_in_child(root: str, sf: str, queries: str | None) -> dict:
+    cmd = [sys.executable, os.path.abspath(__file__), "--root", root, "--sf", sf]
+    if queries:
+        cmd += ["--queries", queries]
+    res = subprocess.run(cmd, capture_output=True, text=True)
     if res.returncode:
         raise RuntimeError(res.stderr[-2000:])
     return json.loads(res.stdout.strip().splitlines()[-1])
 
 
-def ab(base_ref: str, pairs: int, sf: str) -> dict:
+def ab(base_ref: str, pairs: int, sf: str, queries: str | None = None) -> dict:
     base_sha = _git("rev-parse", base_ref)
     head = _git("rev-parse", "HEAD")
     if _git("status", "--porcelain", "--untracked-files=no"):
@@ -132,7 +172,7 @@ def ab(base_ref: str, pairs: int, sf: str) -> dict:
         runs = {"base": [], "head": []}
         for i in range(pairs):
             for side, root in (("base", tmp), ("head", REPO)):
-                runs[side].append(_pass_in_child(root, sf))
+                runs[side].append(_pass_in_child(root, sf, queries))
                 print(f"pair {i + 1}/{pairs} {side} done", file=sys.stderr)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -148,17 +188,27 @@ def ab(base_ref: str, pairs: int, sf: str) -> dict:
                 "rows": runs[side][0][name]["rows"],
                 "hashes": sorted({r[name]["hash"] for r in runs[side]}),
             }
+            if queries:
+                row[side]["first_median_s"] = round(statistics.median(
+                    r[name]["first_wall_s"] for r in runs[side]), 3)
+                row[side]["first_jobs"] = sorted(
+                    {r[name]["first_jobs"] for r in runs[side]})
         row["same_rows"] = row["base"]["hashes"] == row["head"]["hashes"] \
             and len(row["head"]["hashes"]) == 1
         row["median_ratio"] = round(
             row["head"]["median_s"] / row["base"]["median_s"], 3)
         shapes[name] = row
+    if queries:
+        protocol = ("alternating base/head passes, one fresh process each; "
+                    "the query list runs twice; wall and jobs are each "
+                    "query's second (warm) collect(), first_* its first")
+    else:
+        protocol = ("alternating base/head passes, one fresh process each; "
+                    "wall is the shape's whole run (all its anchors), warm "
+                    "index")
     return {"base": base_sha, "head": head, "sf_dir": sf, "pairs": pairs,
-            "cores": os.cpu_count(),
-            "protocol": "alternating base/head passes, one fresh process "
-                        "each; wall is the shape's whole run (all its "
-                        "anchors), warm index",
-            "shapes": shapes}
+            "cores": os.cpu_count(), "protocol": protocol,
+            "queries" if queries else "shapes": shapes}
 
 
 def _default_sf() -> str:
@@ -178,15 +228,24 @@ def main() -> int:
     ap.add_argument("--ab", metavar="BASE_REF",
                     help="run the alternating A/B against BASE_REF")
     ap.add_argument("--pairs", type=int, default=3)
+    ap.add_argument("--queries", metavar="NAME,...",
+                    help="time these registered queries instead of the "
+                         "serving shapes")
     args = ap.parse_args()
     if args.ab:
-        doc = ab(args.ab, args.pairs, args.sf)
-        with open(os.path.join(REPO, "GRAPH_SERVE_AB.json"), "w") as f:
+        doc = ab(args.ab, args.pairs, args.sf, args.queries)
+        key, out = (("queries", "GRAPH_LOOPS_AB.json") if args.queries
+                    else ("shapes", "GRAPH_SERVE_AB.json"))
+        with open(os.path.join(REPO, out), "w") as f:
             json.dump(doc, f, indent=2)
         print(json.dumps({k: (v["same_rows"], v["median_ratio"])
-                          for k, v in doc["shapes"].items()}))
-        return 0 if all(v["same_rows"] for v in doc["shapes"].values()) else 1
-    print(json.dumps(one_pass(os.path.abspath(args.root), args.sf)))
+                          for k, v in doc[key].items()}))
+        return 0 if all(v["same_rows"] for v in doc[key].values()) else 1
+    root = os.path.abspath(args.root)
+    if args.queries:
+        print(json.dumps(queries_pass(root, args.sf, args.queries.split(","))))
+    else:
+        print(json.dumps(one_pass(root, args.sf)))
     return 0
 
 

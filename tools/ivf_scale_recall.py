@@ -11,12 +11,13 @@ This tool measures which effect wins, on the same deterministic
 synthetic corpus, with the same replay discipline as tools/ann_recall.py
 (Spark-built artifacts, rounded grids, (distance, vec_id) tie-breaks).
 
-Usage: python tools/ivf_scale_recall.py [N] [n_queries]
+Usage: python tools/ivf_scale_recall.py [N] [n_queries] [--dir DIR]
 Merges one block into ANN_RECALL.json under "scale_ivf_runs".
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -29,12 +30,17 @@ TOPK = 10
 
 
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-    n_q = int(sys.argv[2]) if len(sys.argv) > 2 else 100
+    from tools.ann_scale_recall import SCALE_ROOT, gen_corpus
 
-    from tools.ann_scale_recall import gen_corpus
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("n", nargs="?", type=int, default=20000)
+    ap.add_argument("n_q", nargs="?", type=int, default=100)
+    ap.add_argument("--dir", default=SCALE_ROOT,
+                    help="root of the scale corpora (default /tmp)")
+    args = ap.parse_args()
+    n, n_q = args.n, args.n_q
 
-    sf_dir = gen_corpus(n)
+    sf_dir = gen_corpus(n, args.dir)
 
     from pyspark.sql import functions as F
 
