@@ -12,6 +12,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from neumann_spark.session import hadoop_fs
 
 TABLES = (
     "region",
@@ -29,12 +33,39 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Each table's schema as Spark 4.1.2 infers it from the fixture files
+# (`tests/test_relational.py` guards the match). Declaring it skips the
+# schema-inference job an undeclared parquet read runs at every load.
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": "c_custkey BIGINT, c_name STRING, c_nationkey INT, "
+                "c_acctbal DOUBLE, c_mktsegment STRING",
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, "
+                "s_acctbal DOUBLE",
+    "part": "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+            "p_size INT, p_retailprice DOUBLE",
+    "orders": "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+              "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, "
+              "o_orderpriority STRING",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+                "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+                "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+                "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ",
+    "events": "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
+              "event_type STRING, value DOUBLE, props STRING",
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, "
+                 "n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan for one fixture table.
+    """Lazy parquet scan for one fixture table, under its declared schema.
 
     Mirrors the reference's table catalog (`relational_engine/src/lib.rs:2653`
     create_table / `:2815` list_tables) — here the catalog is the filesystem
-    plus Spark's own catalog of temp views.
+    plus `SCHEMAS`, so opening a table runs no Spark job.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -42,22 +73,56 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # session timezone defensively in case the caller's session differs.
     if spark.conf.get("spark.sql.session.timeZone", "") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        # The events fixture has shipped `ts` as both TIMESTAMP(MICROS) and
-        # TIMESTAMP(NANOS) across driver versions; Spark rejects nanos
-        # natively, so branch on the dtype the reader actually produces and
-        # only apply the nanos->micros truncation when `ts` came back as a
-        # long (the `nanosAsLong` escape hatch).
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
+        return events_ts(spark.read.schema(events_schema(spark, path)).parquet(path))
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = raw.schema["ts"].dataType
-        if isinstance(ts_type, (T.TimestampType, T.TimestampNTZType)):
-            return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+def events_schema(spark: SparkSession, path: str) -> str:
+    """`SCHEMAS["events"]` with `ts` typed as Spark reads the fixture at
+    `path`.
+
+    The events fixture has shipped `ts` as both TIMESTAMP(MICROS) and
+    TIMESTAMP(NANOS) across driver versions, and Spark-written copies store
+    INT96. Spark rejects nanos natively, so they read as a long (the
+    `nanosAsLong` escape hatch). The type comes from Spark's own parquet
+    schema converter over the first data file's footer, read on the driver
+    (no job).
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ts_type = _footer_schema(spark, path).apply("ts").dataType().sql()
+    return SCHEMAS["events"].replace("ts TIMESTAMP_NTZ", f"ts {ts_type}")
+
+
+def events_ts(df: DataFrame) -> DataFrame:
+    """`ts` as a session `timestamp`: nanos-as-long values truncate to the
+    micros grid, timestamps of either kind cast."""
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The Spark schema (a JVM StructType) of the first data file under
+    `path`: the file itself, or the first part file of a directory, past
+    the `_`/`.` metadata files Spark also skips."""
+    fs, jvm = hadoop_fs(spark, path)
+    status = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(path))
+    if status.isDirectory():
+        status = min((st for st in fs.listStatus(status.getPath())
+                      if st.isFile()
+                      and not st.getPath().getName().startswith(("_", "."))),
+                     key=lambda st: st.getPath().getName())
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, fs.getConf()))
+    try:
+        parquet_schema = reader.getFooter().getFileMetaData().getSchema()
+    finally:
+        reader.close()
+    return jvm.org.apache.spark.sql.execution.datasources.parquet \
+        .ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf()) \
+        .convert(parquet_schema)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neumann_spark.catalog import load
+from neumann_spark.catalog import events_schema, events_ts, load
 from neumann_spark.registry import register
 from neumann_spark.sqlutil import dsum, sql_dsum
 
@@ -113,33 +113,19 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _events_stream(spark: SparkSession, sf_dir: str,
                    single_batch: bool = False) -> DataFrame:
-    """readStream over the events fixture, adapting to the `ts` encoding the
-    file actually stores: TIMESTAMP(MICROS) today (read natively), INT64
-    nanos historically (read as long via `nanosAsLong`, truncated to the
-    micros grid). Mirrors the batch-side branch in catalog.load.
+    """readStream over the events fixture, typed and normalised exactly as
+    catalog.load types the batch read (`events_schema` / `events_ts`).
     `single_batch` pins maxFilesPerTrigger high enough that availableNow
     delivers everything in ONE micro-batch regardless of file count —
     consumers whose idempotence assumes batch monotonicity (the merge
     upsert) get it by construction."""
-    from pyspark.sql import types as T
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_ts = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
-    nanos = not isinstance(raw_ts, (T.TimestampType, T.TimestampNTZType))
-    schema = (
-        f"event_id bigint, ts {'bigint' if nanos else 'timestamp'}, "
-        "user_id bigint, event_type string, value double, props string"
-    )
     reader = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(events_schema(spark, f"{sf_dir}/events.parquet"))
         .option("pathGlobFilter", "events.parquet")  # file source needs a dir
     )
     if single_batch:
         reader = reader.option("maxFilesPerTrigger", str(10**6))
-    stream = reader.parquet(sf_dir)
-    if nanos:
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream
+    return events_ts(reader.parquet(sf_dir))
 
 
 def stream_windowed_counts(

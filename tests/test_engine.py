@@ -16,6 +16,16 @@ def engine(spark):
     return NeumannSparkEngine(spark, SF_DIR)
 
 
+def test_engine_open_runs_no_job_once_graph_is_warm(spark, engine):
+    """With the derived graph already checkpointed (by the module
+    engine), opening another engine only declares scans: its 11 table
+    loads read no schema, so construction schedules no Spark job."""
+    from neumann_spark.engine import NeumannSparkEngine
+
+    _, jobs = jobs_run(spark, lambda: NeumannSparkEngine(spark, SF_DIR))
+    assert jobs == 0
+
+
 def test_sql_select(engine):
     rows = engine.execute(
         "SELECT c_mktsegment, COUNT(*) AS n FROM customer GROUP BY c_mktsegment"

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR, jobs_run
+
 
 def test_natural_join_degenerates_to_cross(spark):
     """No common columns → cross join (`relational_engine/src/lib.rs:4350-4410`)."""
@@ -52,8 +54,12 @@ def test_sum_empty_group_semantics(spark):
 
 def test_events_loader_handles_both_ts_encodings(spark, tmp_path):
     """catalog.load must read `ts` whether the fixture stores
-    TIMESTAMP(MICROS) (current driver) or INT64 nanos (r1-r2 driver) —
-    the encoding has flipped between rounds before."""
+    TIMESTAMP(MICROS) (current driver), INT64 nanos (r1-r2 driver), a
+    UTC-adjusted timestamp or INT96 (a Spark-written copy, as bench.py's
+    multi-file layout is) — the encoding has flipped between rounds
+    before — as one file or as a directory of part files beside `_SUCCESS`
+    and `.crc` siblings, and the footer read that picks the branch runs
+    no Spark job."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -67,25 +73,60 @@ def test_events_loader_handles_both_ts_encodings(spark, tmp_path):
         "value": pa.array([1.0, 2.0], pa.float64()),
         "props": pa.array(["{}", "{}"]),
     }
-    for sub, ts_arr in (
-        ("us", pa.array(base, pa.timestamp("us"))),
-        ("ns", pa.array([b * 1000 for b in base], pa.timestamp("ns"))),
-    ):
-        d = tmp_path / sub
-        d.mkdir()
-        pq.write_table(
-            pa.table({"event_id": cols["event_id"], "ts": ts_arr,
-                      "user_id": cols["user_id"],
-                      "event_type": cols["event_type"],
-                      "value": cols["value"], "props": cols["props"]}),
-            d / "events.parquet",
-        )
+    encodings = {
+        "us": pa.array(base, pa.timestamp("us")),
+        "ns": pa.array([b * 1000 for b in base], pa.timestamp("ns")),
+        "utc": pa.array(base, pa.timestamp("us", tz="UTC")),
+        "int96": pa.array(base, pa.timestamp("us", tz="UTC")),
+    }
+    for sub, ts_arr in encodings.items():
+        int96 = {"use_deprecated_int96_timestamps": sub == "int96"}
+        tbl = pa.table({"event_id": cols["event_id"], "ts": ts_arr,
+                        "user_id": cols["user_id"],
+                        "event_type": cols["event_type"],
+                        "value": cols["value"], "props": cols["props"]})
+        (tmp_path / sub).mkdir()
+        pq.write_table(tbl, tmp_path / sub / "events.parquet", **int96)
+        parts = tmp_path / f"{sub}_multi" / "events.parquet"
+        parts.mkdir(parents=True)
+        (parts / "_SUCCESS").write_bytes(b"")
+        (parts / "._SUCCESS.crc").write_bytes(b"not parquet")
+        for i in range(2):
+            pq.write_table(tbl.slice(i, 1), parts / f"part-{i:05d}.parquet", **int96)
     out = {}
-    for sub in ("us", "ns"):
-        df = load(spark, str(tmp_path / sub), "events")
-        assert dict(df.dtypes)["ts"] == "timestamp"
-        out[sub] = [r["ts"] for r in df.orderBy("event_id").collect()]
-    assert out["us"] == out["ns"]
+    for sub in encodings:
+        for layout in (sub, f"{sub}_multi"):
+            df, jobs = jobs_run(spark, lambda: load(spark, str(tmp_path / layout), "events"))
+            assert jobs == 0, (layout, jobs)
+            assert dict(df.dtypes)["ts"] == "timestamp"
+            out[layout] = [r["ts"] for r in df.orderBy("event_id").collect()]
+    assert all(v == out["us"] for v in out.values()), out
+
+
+def test_declared_schemas_match_inference(spark):
+    """`catalog.SCHEMAS` must equal what Spark infers from the fixture
+    files, type and nullability alike: a declared schema that drifted from
+    the data would have the reader coerce it (or fail) instead of the
+    oracle hashes catching it."""
+    from pyspark.sql.types import StructType
+
+    from neumann_spark.catalog import SCHEMAS, TABLES
+
+    assert set(SCHEMAS) == set(TABLES)
+    for sf_dir in (SF_DIR, SF_DIR.replace("sf0.001", "sf0.01")):
+        for name in TABLES:
+            inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+            assert StructType.fromDDL(SCHEMAS[name]) == inferred, (sf_dir, name)
+
+
+def test_load_runs_no_job(spark):
+    """Opening every fixture table is job-free: the schema is declared,
+    and only the events `ts` branch reads a parquet footer on the
+    driver."""
+    from neumann_spark.catalog import TABLES, load
+
+    frames, jobs = jobs_run(spark, lambda: [load(spark, SF_DIR, t).schema for t in TABLES])
+    assert len(frames) == len(TABLES) and jobs == 0
 
 
 def test_merge_into_rewrites_only_touched_partitions(spark, tmp_path):

@@ -1313,13 +1313,14 @@ def test_graph_stale_corpus_detected(spark, tmp_path):
     idx_path = str(tmp_path / "index")
     save_graph_index_frames(spark, built, idx_path)
 
-    # UPDATE one row's embedding in place (same id set, changed values)
+    # UPDATE one row's embedding in place (same id set and column type,
+    # changed values; the catalog reads `embedding` as declared, float)
     mod = (
         spark.read.parquet(f"{corpus}/embeddings.parquet")
         .withColumn(
             "embedding",
             F.when(F.col("vec_id") == 5,
-                   F.transform("embedding", lambda x: x * 2 + 1))
+                   F.transform("embedding", lambda x: (x * 2 + 1).cast("float")))
             .otherwise(F.col("embedding")))
         .localCheckpoint(eager=True)
     )
