@@ -79,6 +79,25 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
+def load_corpus(spark: SparkSession, corpus_dir: str) -> DataFrame:
+    """`load(spark, corpus_dir, "embeddings")` for a corpus the fixture
+    driver did not write (a persisted index's corpus directory).
+
+    The declared `ARRAY<FLOAT>` reader fails inside a task on any other
+    element type, so the first data file's footer is checked on the
+    driver first (no job) and a mismatch raises naming the file.
+    """
+    path = f"{corpus_dir}/embeddings.parquet"
+    schema = _footer_schema(spark, path)
+    got = (schema.apply("embedding").dataType().sql()
+           if "embedding" in list(schema.fieldNames()) else "missing")
+    if got != "ARRAY<FLOAT>":
+        raise ValueError(
+            f"{path}: `embedding` is {got}, expected ARRAY<FLOAT> "
+            "(rewrite it with embedding cast to array<float>)")
+    return load(spark, corpus_dir, "embeddings")
+
+
 def events_schema(spark: SparkSession, path: str) -> str:
     """`SCHEMAS["events"]` with `ts` typed as Spark reads the fixture at
     `path`.

@@ -86,6 +86,8 @@ class NeumannSparkEngine:
         # embedding collections (`vector_engine/src/lib.rs:1369-1585`):
         # session membership overlay; fixture vectors are uncollected
         self._emb_coll = local_df(spark, [], "key string, collection string")
+        # (frame, dim) of the `_embeddings` frame the last EMBED checked
+        self._emb_dim: "Optional[tuple[DataFrame, int]]" = None
         # unified entity property store (`tensor_unified/src/lib.rs:475`:
         # key → table fields; the node/embedding halves live in the
         # overlays above, joined by the derived id / the key string)
@@ -131,7 +133,10 @@ class NeumannSparkEngine:
             self._cache_clear()
         elif cmd in self._cache:
             self._cache.move_to_end(cmd)  # LRU touch
-            return self._cache[cmd]
+            hit = self._cache[cmd]
+            if not hit.is_cached:
+                hit.persist()
+            return hit
 
         if head == "MATCH" and re.search(r"\b(DETACH\s+)?DELETE\b", cmd, re.I):
             self._cache_clear()  # a write despite its MATCH head
@@ -318,19 +323,23 @@ class NeumannSparkEngine:
         return True
 
     def _cache_store(self, cmd: str, out: DataFrame) -> None:
-        """Memoize + persist: the first re-execution materializes into
-        Spark's block cache, so repeated facade reads are memory-speed —
-        the Spark analogue of the reference's result-map cache. Bounded
-        LRU; evicted/invalidated entries release their storage."""
-        out.persist()
+        """Memoize the frame, unpersisted: the cache fills on first re-use
+        (`execute`'s hit branch persists, so the second run materializes
+        into Spark's block cache and later runs are memory-speed — the
+        Spark analogue of the reference's result-map cache). Under AQE a
+        persisted frame's fill is its own query-stage job, so persisting
+        here would charge that job to every one-off read. Bounded LRU;
+        evicted/invalidated entries release their storage."""
         self._cache[cmd] = out
         while len(self._cache) > self.CACHE_MAX:
             _, old = self._cache.popitem(last=False)
-            old.unpersist(False)
+            if old.is_cached:
+                old.unpersist(False)
 
     def _cache_clear(self) -> None:
         for df in self._cache.values():
-            df.unpersist(False)
+            if df.is_cached:
+                df.unpersist(False)
         self._cache.clear()
 
     # -- paginated cursor tokens (`query_router/src/cursor.rs:1-435`) -----
@@ -1285,24 +1294,33 @@ class NeumannSparkEngine:
     def _store_embedding(self, key: str, vals: list[float],
                          collection: Optional[str] = None) -> None:
         # dimension enforced per store, like the reference
-        # (`vector_engine/src/lib.rs:1840-1895`)
-        first = self._embeddings.select(F.size("embedding").alias("d")).head()
-        if first is not None and first["d"] != len(vals):
+        # (`vector_engine/src/lib.rs:1840-1895`); read by a job only when
+        # `_embeddings` is not the frame the last store checked (delete,
+        # clear, LOAD, ENTITY and overlay checkpoints reassign it)
+        memo = self._emb_dim
+        if memo is not None and memo[0] is self._embeddings:
+            dim = memo[1]
+        else:
+            first = self._embeddings.select(F.size("embedding").alias("d")).head()
+            dim = None if first is None else first["d"]
+        if dim is not None and dim != len(vals):
             raise ValueError(
-                f"dimension mismatch: store holds {first['d']}-d vectors, "
+                f"dimension mismatch: store holds {dim}-d vectors, "
                 f"got {len(vals)}"
             )
         new = local_df(self.spark,
             [(key, vals)], "key string, embedding array<float>")
-        self._embeddings = (
-            self._embeddings.join(new.select("key"), "key", "left_anti").unionAll(new)
-        )
+        # single-key replace as a null-safe filter, not an anti-join: a
+        # join against a local frame adds a broadcast-stage job to every
+        # later read of the overlay (NULL keys survive either form)
+        self._embeddings = self._embeddings.filter(
+            ~F.col("key").eqNullSafe(key)).unionAll(new)
+        self._emb_dim = (self._embeddings, len(vals))
         if collection:
             row = local_df(self.spark,
                 [(key, collection)], "key string, collection string")
-            self._emb_coll = (
-                self._emb_coll.join(row.select("key"), "key", "left_anti")
-                .unionAll(row))
+            self._emb_coll = self._emb_coll.filter(
+                ~F.col("key").eqNullSafe(key)).unionAll(row)
 
     def _exec_embed(self, cmd: str) -> DataFrame:
         """EMBED STORE 'key' [vec] | GET 'key' | DELETE 'key' |
@@ -2434,9 +2452,8 @@ class NeumannSparkEngine:
         row = local_df(self.spark,
             [(key, label, json.dumps(props, sort_keys=True))],
             "key string, label string, props string")
-        self._entity_props = (
-            self._entity_props.join(row.select("key"), "key", "left_anti")
-            .unionAll(row))
+        self._entity_props = self._entity_props.filter(
+            ~F.col("key").eqNullSafe(key)).unionAll(row)
         nid = self._entity_id(key)
         node = local_df(self.spark, [(nid, label)], "id bigint, label string")
         # upsert = replace: validate against the store minus this entity's
@@ -2449,9 +2466,8 @@ class NeumannSparkEngine:
             new = local_df(self.spark,
                 [(key, [float(x) for x in embedding])],
                 "key string, embedding array<float>")
-            self._embeddings = (
-                self._embeddings.join(new.select("key"), "key", "left_anti")
-                .unionAll(new))
+            self._embeddings = self._embeddings.filter(
+                ~F.col("key").eqNullSafe(key)).unionAll(new)
         self._checkpoint_overlays()
 
     _ENT_KEY = r"'([^']+)'"

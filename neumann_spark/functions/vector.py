@@ -7,8 +7,9 @@ kNN (SIMD + rayon, `vector_engine/src/lib.rs:1950`), three distance metrics
 (`:1369-1585`).
 
 Spark-first: similarity scoring is a pure column expression
-(`F.zip_with` element products folded by `F.aggregate`) — JVM-side, inside
-whole-stage codegen, no Python in the hot path. Top-k = `orderBy(score).
+(`zip_with` element products folded by `aggregate`) — JVM-side, inside
+whole-stage codegen, no Python in the hot path; `knn` builds it as one
+parsed SQL expression (`score_expr`). Top-k = `orderBy(score).
 limit(k)`, which Spark executes as per-partition top-k + driver merge
 (TakeOrderedAndProject), i.e. the distributed analog of the reference's
 binary-heap selection. Filtered search relies on Catalyst pushing the
@@ -24,6 +25,7 @@ ANN (HNSW/IVF analogs) lives in `neumann_spark.pipeline.ann`.
 
 from __future__ import annotations
 
+import math
 from typing import Iterable, Optional, Sequence
 
 import pandas as pd
@@ -60,21 +62,39 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
-def euclidean_expr(a: Column, b: Column) -> Column:
-    """Euclidean distance (`DistanceMetric::Euclidean`,
-    `vector_engine/src/lib.rs:281-289`)."""
-    diffs = F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v))
+def _sql_double(x: float) -> str:
+    """Exact SQL DOUBLE literal: `repr` is the shortest round-trip form,
+    which Spark parses back to the same double; non-finite values, which
+    have no literal syntax, cast from their string names."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
-def score_expr(metric: str, a: Column, b: Column) -> Column:
+def score_expr(metric: str, vec_col: str, query_vec: Sequence[float]) -> Column:
+    """`metric` between an array column and a query vector as ONE parsed
+    SQL expression (`vector_engine/src/lib.rs:281-289`). It is the same
+    fold as `dot_expr`/`cosine_expr` — double products summed left to
+    right from a DOUBLE zero (`CAST(0 AS DOUBLE)`; a bare `0.0` is a
+    DECIMAL) — so scores are the same doubles, but one `F.expr` parse
+    replaces the Python lambda builders' per-node py4j round trips."""
+    a = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+    q = "CAST(array({}) AS ARRAY<DOUBLE>)".format(
+        ", ".join(_sql_double(x) for x in query_vec))
+
+    def fold(l: str, r: str, term: str) -> str:
+        return (f"aggregate(zip_with({l}, {r}, (x, y) -> {term}), "
+                "CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
+
     if metric == "cosine":
-        return cosine_expr(a, b)
-    if metric == "dot":
-        return dot_expr(a, b)
-    if metric == "euclidean":
-        return euclidean_expr(a, b)
-    raise ValueError(f"unknown metric {metric!r}")
+        sql = (f"{fold(a, q, 'x * y')} / (sqrt({fold(a, a, 'x * y')})"
+               f" * sqrt({fold(q, q, 'x * y')}))")
+    elif metric == "dot":
+        sql = fold(a, q, "x * y")
+    elif metric == "euclidean":
+        sql = f"sqrt({fold(a, q, '(x - y) * (x - y)')})"
+    else:
+        raise ValueError(f"unknown metric {metric!r}")
+    return F.expr(sql)
 
 
 def knn(
@@ -89,15 +109,15 @@ def knn(
     """Brute-force kNN — `search_similar(_with_metric)`
     (`vector_engine/src/lib.rs:1950,2049`) + filtered variant (`:1698`).
 
-    The query vector ships as a literal array (a broadcast scalar at scale);
-    scoring is a map-only stage over however many partitions the store has,
-    then TakeOrdered merges per-partition top-k on the driver — no shuffle.
-    `pre_filter` mirrors `search_similar_filtered`'s pre-filter strategy;
-    Catalyst will push it into the scan when selective.
+    The query vector ships as an exact `array(<double>D, …)` literal inside
+    one SQL score expression (`score_expr`); scoring is a map-only stage
+    over however many partitions the store has, then TakeOrdered merges
+    per-partition top-k on the driver — no shuffle. `pre_filter` mirrors
+    `search_similar_filtered`'s pre-filter strategy; Catalyst will push it
+    into the scan when selective.
     """
-    q = F.lit(query_vec).cast("array<double>")
     scored = df if pre_filter is None else df.filter(pre_filter)
-    scored = scored.withColumn("score", score_expr(metric, F.col(vec_col), q))
+    scored = scored.withColumn("score", score_expr(metric, vec_col, query_vec))
     asc = metric == "euclidean"
     # rank by the RAW score (the reference's heap compares unrounded f32
     # scores, `vector_engine/src/lib.rs:1950`); round only for display.

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from neumann_spark.catalog import load
+from neumann_spark.catalog import load, load_corpus
 from neumann_spark.registry import register
 from neumann_spark.session import scratch_dir as _scratch_dir
 from neumann_spark.session import stage_move_part as _stage_move_part
@@ -3666,8 +3666,7 @@ def _graph_batch_search(spark: SparkSession, sf_dir: str,
     # corpus once at collect time — never a per-call checkpoint of the
     # whole normalized corpus (20.9 s/query measured at 1M)
     from_disk = len(index) <= 5 or index[5] is None
-    u = (unit_embeddings(load(spark, sf_dir, "embeddings")) if from_disk
-         else index[5])
+    u = unit_embeddings(load_corpus(spark, sf_dir)) if from_disk else index[5]
     if from_disk and not sq_rescore and len(index) > 6:
         _check_loaded_corpus(index, u, sf_dir)
     qids = [int(a) for a in anchors]

@@ -645,6 +645,91 @@ def test_cache_lru_bound(engine):
     assert first not in engine._cache
 
 
+_VEC64 = "[" + ", ".join(["0.25"] * 64) + "]"
+
+
+def test_one_off_reads_run_only_their_plan_jobs(spark):
+    """A read run once pays only its own plan: the result is memoized
+    but not persisted, so collecting it schedules the same jobs as a
+    fresh frame over the same plan (a persisted result would add the
+    cache fill's query-stage job to whichever of the two runs first).
+    The fresh frame matters: a frame collected twice reuses its
+    executed plan's shuffle stages."""
+    from neumann_spark.engine import NeumannSparkEngine
+
+    eng = NeumannSparkEngine(spark, SF_DIR)
+    eng.execute(f"EMBED STORE 'oneoff:1' {_VEC64}")
+    for cmd in ("SELECT count(*) AS n FROM nation WHERE n_regionkey = 1",
+                "NEIGHBORS 17 OUTGOING",
+                "FIND NODES nation",
+                "SIMILAR 'oneoff:1' TOP 5",
+                f"SIMILAR {_VEC64} TOP 5 EUCLIDEAN"):
+        df = eng.execute(cmd)
+        _, plain = jobs_run(spark, df.toDF(*df.columns).collect)
+        _, jobs = jobs_run(spark, df.collect)
+        assert not df.is_cached and jobs == plain, (cmd, jobs, plain)
+
+
+def test_cache_fills_on_reuse_and_writes_release_it(spark):
+    from pyspark import StorageLevel
+
+    from neumann_spark.engine import NeumannSparkEngine
+
+    eng = NeumannSparkEngine(spark, SF_DIR)
+    q = "SELECT count(*) AS n FROM region"
+    a = eng.execute(q)
+    a.collect()
+    assert a.storageLevel == StorageLevel.NONE
+    b = eng.execute(q)
+    assert b is a and b.is_cached and b.storageLevel != StorageLevel.NONE
+    assert b.collect()[0]["n"] == 5
+    eng.execute("NODE 9000077 cachefill")
+    assert not a.is_cached and a.storageLevel == StorageLevel.NONE
+    assert eng.execute(q) is not a
+
+
+def test_embed_dimension_memo(spark):
+    """The store's dimension is read once per `_embeddings` frame: a
+    second EMBED STORE runs no job, a wrong dimension still raises, and
+    any other reassignment of the store (here `clear_embeddings`) is
+    re-read rather than trusted."""
+    from neumann_spark.engine import NeumannSparkEngine
+
+    eng = NeumannSparkEngine(spark, SF_DIR)
+    eng.execute(f"EMBED STORE 'memo:1' {_VEC64}")
+    _, jobs = jobs_run(spark, lambda: eng.execute(f"EMBED STORE 'memo:2' {_VEC64}"))
+    assert jobs == 0
+    with pytest.raises(ValueError, match="store holds 64-d vectors, got 2"):
+        eng.execute("EMBED STORE 'memo:3' [1.0, 2.0]")
+    eng.clear_embeddings()
+    eng.execute("EMBED STORE 'memo:4' [1.0, 2.0, 3.0]")  # empty store: any dim
+    with pytest.raises(ValueError, match="store holds 3-d vectors, got 64"):
+        eng.execute(f"EMBED STORE 'memo:5' {_VEC64}")
+    assert [r["key"] for r in eng.execute("SHOW EMBEDDINGS").collect()] == ["memo:4"]
+
+
+def test_restore_replaces_a_single_key(spark):
+    """Re-storing a key (EMBED, its collection membership, ENTITY props
+    and embedding) leaves exactly one row for it; NULL keys survive."""
+    from neumann_spark.engine import NeumannSparkEngine
+    from neumann_spark.session import local_df
+
+    eng = NeumannSparkEngine(spark, SF_DIR)
+    eng._emb_coll = local_df(spark, [(None, "c1")], "key string, collection string")
+    vec2 = "[" + ", ".join(["0.5"] * 64) + "]"
+    eng.execute(f"EMBED STORE 'dup:1' {_VEC64} IN c1")
+    eng.execute(f"EMBED STORE 'dup:1' {vec2} IN c1")
+    got = eng.execute("EMBED GET 'dup:1'").collect()
+    assert len(got) == 1 and got[0]["embedding"] == [0.5] * 64
+    coll = [tuple(r) for r in eng._emb_coll.collect()]
+    assert sorted(coll, key=str) == [("dup:1", "c1"), (None, "c1")]
+    eng.execute(f"ENTITY CREATE 'dup:e' {{label: person}} EMBEDDING {_VEC64}")
+    eng.execute(f"ENTITY UPDATE 'dup:e' {{label: robot}} EMBEDDING {vec2}")
+    props = eng._entity_props.filter("key = 'dup:e'").collect()
+    assert [r["label"] for r in props] == ["robot"]
+    assert eng.execute("EMBED GET 'dup:e'").count() == 1
+
+
 def test_fk_insert_validation_and_restrict(engine):
     engine.execute("CREATE TABLE fk_users (id INT, name TEXT)")
     engine.execute(

@@ -55,6 +55,50 @@ def test_knn_pre_filter(spark):
     assert 1 not in {r["vec_id"] for r in top}
 
 
+def _lambda_score(metric, a, q):
+    """The Column-lambda scorer `knn` used before `score_expr` became one
+    SQL expression: the bit-for-bit reference for it."""
+    from neumann_spark.functions.vector import _as_double, cosine_expr, dot_expr
+
+    if metric == "cosine":
+        return cosine_expr(a, q)
+    if metric == "dot":
+        return dot_expr(a, q)
+    diffs = F.zip_with(_as_double(a), _as_double(q), lambda x, y: (x - y) * (x - y))
+    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v))
+
+
+def test_sql_score_matches_lambda_form_bitwise(spark):
+    """`score_expr` (one parsed SQL expression over an exact double
+    literal) returns the same doubles as the lambda form for every
+    metric: fixture anchors, an unrounded float64 query (the literal must
+    round-trip exactly) and non-finite queries."""
+    import struct
+
+    import numpy as np
+
+    from neumann_spark.catalog import load
+    from neumann_spark.functions.vector import score_expr
+    from tests.conftest import SF_DIR
+
+    emb = load(spark, SF_DIR, "embeddings")
+    anchors = [[float(x) for x in r["embedding"]]
+               for r in emb.filter(F.col("vec_id") < 2).orderBy("vec_id").collect()]
+    rough = np.random.default_rng(5).normal(size=64) * 1e3
+    queries = anchors + [rough.tolist(), [math.nan] + [1.0] * 63,
+                         [math.inf, -math.inf] + [-0.0] * 62]
+    bits = lambda v: None if v is None else struct.pack(">d", v)
+    for qi, qv in enumerate(queries):
+        for metric in ("cosine", "dot", "euclidean"):
+            lam = _lambda_score(metric, F.col("embedding"),
+                                F.lit(qv).cast("array<double>"))
+            rows = emb.select("vec_id", score_expr(metric, "embedding", qv).alias("s"),
+                              lam.alias("ref")).collect()
+            assert len(rows) == 500
+            bad = [r for r in rows if bits(r["s"]) != bits(r["ref"])]
+            assert not bad, (qi, metric, bad[:3])
+
+
 def test_pandas_cosine_matches_expr(spark):
     from neumann_spark.functions.vector import cosine_expr, cosine_scores_pandas
 
@@ -1345,6 +1389,41 @@ def test_graph_stale_corpus_detected(spark, tmp_path):
         sq_rescore=True).collect()
     per_q = {a: sum(int(r["qid"]) == a for r in rows) for a in anchors}
     assert per_q == {a: 10 for a in anchors}, per_q
+
+
+def test_graph_corpus_of_doubles_refused_on_the_driver(spark, tmp_path):
+    """A persisted index's corpus whose `embedding` is array<double>
+    (not the catalog's ARRAY<FLOAT>) raises a ValueError naming the file
+    from the footer, before any Spark job; the same index serves the
+    float corpus it was built over."""
+    import pytest as _pytest
+
+    from neumann_spark.catalog import load
+    from neumann_spark.pipeline.ann import (
+        GRAPH_T_LOW,
+        _build_graph_index,
+        _graph_rescore_from,
+        load_graph_index,
+        save_graph_index_frames,
+    )
+    from tests.conftest import SF_DIR
+
+    emb = load(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 64)
+    floats, doubles = str(tmp_path / "floats"), str(tmp_path / "doubles")
+    emb.write.parquet(f"{floats}/embeddings.parquet")
+    emb.withColumn("embedding", F.col("embedding").cast("array<double>")) \
+        .write.parquet(f"{doubles}/embeddings.parquet")
+    idx_path = str(tmp_path / "index")
+    save_graph_index_frames(spark, _build_graph_index(spark, emb), idx_path)
+    loaded = load_graph_index(spark, idx_path)
+    assert len(_graph_rescore_from(spark, floats, loaded, GRAPH_T_LOW).collect()) == 10
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    for sq in (False, True):
+        before = sched.nextJobId()
+        with _pytest.raises(ValueError, match=r"doubles/embeddings\.parquet: "
+                            r"`embedding` is ARRAY<DOUBLE>"):
+            _graph_rescore_from(spark, doubles, loaded, GRAPH_T_LOW, sq_rescore=sq)
+        assert sched.nextJobId() == before
 
 
 def test_graph_batch_join_form_matches_inlist(spark, monkeypatch):

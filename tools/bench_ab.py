@@ -5,16 +5,18 @@ in BENCH notes since r4), so round-over-round comparisons from one-shot
 numbers routinely read as phantom regressions (r5's driver number did).
 This tool is the repo's answer: it exports the base ref into a
 throwaway directory (`git archive` under $TMPDIR), runs `python bench.py`
-ALTERNATELY (A, B, A, B, ...) in the same session so both sides sample
-the same machine state, keeps the per-query MINIMUM across runs (the
-least-noise estimator for a throughput-bound suite), and writes
-BENCH_AB.json with per-query deltas. The HEAD side is the working tree;
+ALTERNATELY in the same session so both sides sample the same machine
+state — base first in odd pairs, HEAD first in even ones (B A, A B, ...),
+so neither side always runs in the other's wake — keeps the per-query
+MINIMUM across runs (the least-noise estimator for a throughput-bound
+suite), and writes BENCH_AB.json with per-query deltas. The HEAD side is the working tree;
 its recorded ref gets a `+worktree` suffix when tracked files differ
 from HEAD.
 
 Usage: python tools/bench_ab.py [base_ref] [runs_per_side]
   base_ref defaults to the most recent driver round-commit
-  (message 'round N: ...'); runs_per_side defaults to 2.
+  (message 'round N: ...'); runs_per_side defaults to 3 (at 2, a
+  ±40% single-layout swing was indistinguishable from noise).
 
 Read %delta with the noise floor in mind: |delta| under ~15% is machine
 noise, not signal.
@@ -50,7 +52,7 @@ def _bench_once(cwd: str) -> dict:
 def main() -> int:
     base_ref = sys.argv[1] if len(sys.argv) > 1 else _run(
         ["git", "log", "--grep", "^round ", "-1", "--format=%H"]).strip()
-    runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
+    runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     if not base_ref:
         print("no base ref found", file=sys.stderr)
         return 1
@@ -61,12 +63,13 @@ def main() -> int:
     try:
         subprocess.run(f"git archive {base_ref} | tar -x -C {wt}", shell=True,
                        cwd=REPO, check=True)
-        head_runs, base_runs = [], []
+        sides = {"base": (wt, []), "HEAD": (REPO, [])}
         for i in range(runs):
-            print(f"run {i + 1}/{runs}: HEAD ...", file=sys.stderr, flush=True)
-            head_runs.append(_bench_once(REPO))
-            print(f"run {i + 1}/{runs}: base ...", file=sys.stderr, flush=True)
-            base_runs.append(_bench_once(wt))
+            for side in (("base", "HEAD") if i % 2 == 0 else ("HEAD", "base")):
+                print(f"run {i + 1}/{runs}: {side} ...", file=sys.stderr, flush=True)
+                cwd, series = sides[side]
+                series.append(_bench_once(cwd))
+        head_runs, base_runs = sides["HEAD"][1], sides["base"][1]
     finally:
         shutil.rmtree(wt, ignore_errors=True)
 
@@ -95,6 +98,7 @@ def main() -> int:
         "head": head,
         "base": base_ref,
         "runs_per_side": runs,
+        "order": "base first in odd pairs, HEAD first in even pairs",
         "note": ("per-query MIN across interleaved runs; |delta| < ~15% is "
                  "machine noise on this box, not signal; single- and "
                  "multi-layout series compared separately"),
