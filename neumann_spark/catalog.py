@@ -71,7 +71,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     # Timestamp values hash against a UTC-naive DuckDB oracle; pin the
     # session timezone defensively in case the caller's session differs.
-    if spark.conf.get("spark.sql.session.timeZone", "") != "UTC":
+    # Read the effective zone: a "" default is validated as a zone id and
+    # raises when the session never set the key.
+    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from neumann_spark.catalog import TABLES, load
 from neumann_spark.functions.vector import knn
 from neumann_spark.graph.model import edges_df, nodes_df, undirected_edges
-from neumann_spark.graph.traversal import bfs_levels
+from neumann_spark.graph.traversal import bfs_levels, hop_distance
 from neumann_spark.session import local_df, run_actions_parallel
 
 # Overlay lineage-truncation cadence: mutations between lazy
@@ -1252,9 +1252,13 @@ class NeumannSparkEngine:
     def _exec_path(self, cmd: str) -> DataFrame:
         """`PATH [SHORTEST|ALL|WEIGHTED] a -> b [MAX d] [LIMIT n]`
         (`neumann_parser` PathStmt / PathAlgorithm), plus the shorthand
-        `PATH a TO b [MAX d]`. SHORTEST = BFS level; WEIGHTED = bounded
-        Bellman-Ford relaxation (the distributed Dijkstra analog); ALL =
-        path counts per hop length (cycle-free walk enumeration)."""
+        `PATH a TO b [MAX d]`. WEIGHTED = bounded Bellman-Ford relaxation
+        (the distributed Dijkstra analog). SHORTEST and ALL both answer
+        the hop distance (`dist`, or `hops` for ALL) with `hop_distance`:
+        a bidirectional BFS that holds the two frontiers on the driver and
+        collects, per round, only the edges incident to them — one Spark
+        job per two hops (`MAX 2` runs 1 job, `MAX 4` 2), where the
+        whole-graph `bfs_levels` walk pays several jobs per hop."""
         m = self._require(
             re.match(
                 r"PATH\s+(?:(SHORTEST|ALL|WEIGHTED)\s+)?'?(\d+)'?\s*"
@@ -1272,19 +1276,10 @@ class NeumannSparkEngine:
             dist = bounded_dijkstra(ue, a, max_d)
             out = dist.filter(F.col("node") == b).select(
                 "node", F.round("dist", 6).alias("dist"))
-        elif algo == "ALL":
-            src = local_df(self.spark, [(a, a)], "source bigint, node bigint")
-            # count simple shortest-path-length-d arrivals per hop count:
-            # re-run BFS per depth bound (bounded enumeration, SURVEY §2.9)
-            levels = bfs_levels(ue, src, max_d)
-            out = (
-                levels.filter(F.col("node") == b)
-                .select(F.col("node"), F.col("dist").alias("hops"))
-            )
         else:
-            src = local_df(self.spark, [(a, a)], "source bigint, node bigint")
-            levels = bfs_levels(ue, src, max_d)
-            out = levels.filter(F.col("node") == b).select("node", "dist")
+            d = hop_distance(ue, a, b, max_d)
+            out = local_df(self.spark, [] if d is None else [(b, d)],
+                           f"node bigint, {'hops' if algo == 'ALL' else 'dist'} int")
         if m.group(5):
             out = out.limit(int(m.group(5)))
         return out

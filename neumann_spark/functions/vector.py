@@ -25,7 +25,6 @@ ANN (HNSW/IVF analogs) lives in `neumann_spark.pipeline.ann`.
 
 from __future__ import annotations
 
-import math
 from typing import Iterable, Optional, Sequence
 
 import pandas as pd
@@ -62,24 +61,22 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
-def _sql_double(x: float) -> str:
-    """Exact SQL DOUBLE literal: `repr` is the shortest round-trip form,
-    which Spark parses back to the same double; non-finite values, which
-    have no literal syntax, cast from their string names."""
-    x = float(x)
-    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
-
-
 def score_expr(metric: str, vec_col: str, query_vec: Sequence[float]) -> Column:
     """`metric` between an array column and a query vector as ONE parsed
     SQL expression (`vector_engine/src/lib.rs:281-289`). It is the same
     fold as `dot_expr`/`cosine_expr` — double products summed left to
     right from a DOUBLE zero (`CAST(0 AS DOUBLE)`; a bare `0.0` is a
     DECIMAL) — so scores are the same doubles, but one `F.expr` parse
-    replaces the Python lambda builders' per-node py4j round trips."""
+    replaces the Python lambda builders' per-node py4j round trips.
+
+    The query vector is one string literal of `repr`s, split and cast:
+    `repr` is the shortest round-trip form, so each element casts back to
+    the same double (`nan`, `inf` and `-0.0` included). Catalyst analyses
+    it as one literal, where an `array(<d>D, …)` of 64 literals cost
+    ~20 ms per occurrence and cosine carries the vector three times."""
     a = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
-    q = "CAST(array({}) AS ARRAY<DOUBLE>)".format(
-        ", ".join(_sql_double(x) for x in query_vec))
+    q = "CAST(split('{}', ',') AS ARRAY<DOUBLE>)".format(
+        ",".join(repr(float(x)) for x in query_vec))
 
     def fold(l: str, r: str, term: str) -> str:
         return (f"aggregate(zip_with({l}, {r}, (x, y) -> {term}), "
@@ -109,8 +106,8 @@ def knn(
     """Brute-force kNN — `search_similar(_with_metric)`
     (`vector_engine/src/lib.rs:1950,2049`) + filtered variant (`:1698`).
 
-    The query vector ships as an exact `array(<double>D, …)` literal inside
-    one SQL score expression (`score_expr`); scoring is a map-only stage
+    The query vector ships as an exact literal inside one SQL score
+    expression (`score_expr`); scoring is a map-only stage
     over however many partitions the store has, then TakeOrdered merges
     per-partition top-k on the driver — no shuffle. `pre_filter` mirrors
     `search_similar_filtered`'s pre-filter strategy; Catalyst will push it

@@ -15,12 +15,16 @@ exactly Dijkstra's answer once K ≥ graph diameter.
 
 from __future__ import annotations
 
+from collections import defaultdict
+from typing import Optional
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from neumann_spark.graph.model import GRAPH_SQL_CTE, edges_df, undirected_edges
 from neumann_spark.registry import register
 from neumann_spark.session import local_df
+from neumann_spark.sqlutil import lit_in
 
 # recursive-CTE-enabled variant of the shared graph derivation
 RECURSIVE_CTE = GRAPH_SQL_CTE.replace("WITH nodes", "WITH RECURSIVE nodes", 1)
@@ -58,6 +62,39 @@ def bfs_levels(
         if nxt.isEmpty():  # materializes the level's checkpoint
             break
     return visited
+
+
+def hop_distance(edges: DataFrame, a: int, b: int, max_depth: int) -> Optional[int]:
+    """Hop count of the shortest a–b path over symmetrized `edges` if it is
+    ≤ max_depth, else None (`find_path`, `graph_engine/src/lib.rs:4794`).
+
+    Meet-in-the-middle BFS with both frontiers and visited maps on the
+    driver. Each round is ONE collect of `edges` filtered to
+    `src IN (<frontier of a ∪ frontier of b>)`, which grows both sides by a
+    hop; with one hop of budget left only the smaller frontier grows. After
+    a round the visited maps are the balls of radius la around a and lb
+    around b, so they meet iff the distance is ≤ la + lb, and then the
+    least da[x] + db[x] over the meeting nodes is that distance. The rows
+    collected per round are the edges incident to the two frontiers: the
+    search assumes point-query frontiers, as `bfs_levels`' broadcast
+    frontiers at ≤ 4 hops do. `a == b` runs no job."""
+    if a == b:
+        return 0
+    seen, fronts, hops = [{a: 0}, {b: 0}], [{a}, {b}], [0, 0]
+    while (all(fronts) and sum(hops) < max_depth
+           and not seen[0].keys() & seen[1].keys()):
+        sides = ((0, 1) if sum(hops) + 1 < max_depth
+                 else (min((0, 1), key=lambda s: len(fronts[s])),))
+        adj = defaultdict(list)
+        hit = edges.filter(lit_in("src", set().union(*(fronts[s] for s in sides))))
+        for u, v in hit.select("src", "dst").collect():
+            adj[u].append(v)
+        for s in sides:
+            hops[s] += 1
+            fronts[s] = {v for u in fronts[s] for v in adj[u] if v not in seen[s]}
+            seen[s].update(dict.fromkeys(fronts[s], hops[s]))
+    meet = seen[0].keys() & seen[1].keys()
+    return min((seen[0][x] + seen[1][x] for x in meet), default=None)
 
 
 @register(

@@ -30,6 +30,7 @@ from neumann_spark.session import scratch_dir as _scratch_dir
 from neumann_spark.session import stage_move_part as _stage_move_part
 from neumann_spark.session import (bounded_actions as _bounded_actions,
                                    empty_df, local_df, run_actions_parallel)
+from neumann_spark.sqlutil import lit_in
 
 LSH_PLANES = 4
 DIM = 64
@@ -1880,21 +1881,6 @@ def _grouped_pair_distances(u: DataFrame, keyed: DataFrame,
     )
 
 
-def _lit_in(name: str, ids) -> Column:
-    """`name IN (<ids>)` as ONE parsed expression — bit-identical plan to
-    `F.col(name).isin(list)` (literal In → InSet, same parquet pushdown)
-    but built in one py4j round-trip instead of one `lit()` call PER
-    element: at the serve loop's 12K-id candidate lists the isin form
-    spent ~7 s/round of pure driver+py4j time (measured at 1M: 8.3 s vs
-    1.3 s per ADC probe, §1/§5 — r14). The `L` suffix pins LongType
-    literals, exactly what `lit(python int)` produced, so the analyzed
-    predicate (and the plan-asserted pushdown) is unchanged. Ids must be
-    a non-empty iterable of ints."""
-    body = ",".join(f"{int(v)}L" for v in ids)
-    assert body, "_lit_in needs a non-empty id list"
-    return F.expr(f"{name} IN ({body})")
-
-
 def _top_m_edges(scored: DataFrame, m: int = GRAPH_M) -> DataFrame:
     """(src, dst, d) -> (src, pos, dst): per-source top-m by (d, dst)."""
     w = Window.partitionBy("src").orderBy("d", "dst")
@@ -3672,7 +3658,7 @@ def _graph_batch_search(spark: SparkSession, sf_dir: str,
     qids = [int(a) for a in anchors]
     qvs = {
         int(r["vec_id"]): [float(x) for x in r["embedding"]]
-        for r in u.filter(_lit_in("vec_id", qids)).collect()
+        for r in u.filter(lit_in("vec_id", qids)).collect()
     }
     # probe selection stays a driver-side ranking of the k-row centroid
     # list per anchor (bounded: |anchors| * k tuples), but the warm frame
@@ -3717,7 +3703,7 @@ def _graph_batch_search(spark: SparkSession, sf_dir: str,
         # (plan-asserted in tests/test_plans.py for both regimes)
         probe = edges.filter(F.col("pos") < c)
         if len(srcs) <= GRAPH_PROBE_INLIST_MAX:
-            probe = probe.filter(_lit_in("src", srcs))
+            probe = probe.filter(lit_in("src", srcs))
         if "block" in edges.columns:  # persisted: prune edge files
             probe = probe.filter(F.col("block").isin(
                 sorted({v % GRAPH_EDGE_BLOCKS for v in srcs})))
@@ -3787,7 +3773,7 @@ def _graph_batch_search(spark: SparkSession, sf_dir: str,
                         if dst != q and dst not in evald[q])
                 if new_pairs:
                     score(
-                        codes_long.filter(_lit_in(
+                        codes_long.filter(lit_in(
                             "vec_id", sorted({v for _, v in new_pairs}))),
                         local_df(spark, sorted(new_pairs),
                                  "qid bigint, vec_id bigint"))

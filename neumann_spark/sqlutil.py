@@ -15,13 +15,29 @@ comparison. Two strategies, used consistently on BOTH sides:
    awkward (division chains, sqrt, trig).
 
 These helpers exist for *differential testing determinism*, not semantics —
-on a production cluster you'd just `F.sum(col)`.
+on a production cluster you'd just `F.sum(col)`. `lit_in` is the one
+builder of literal id-list predicates.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def lit_in(name: str, ids) -> Column:
+    """`name IN (<ids>)` as ONE parsed expression — bit-identical plan to
+    `F.col(name).isin(list)` (literal In → InSet, same parquet pushdown)
+    but built in one py4j round-trip instead of one `lit()` call PER
+    element: at the serve loop's 12K-id candidate lists the isin form
+    spent ~7 s/round of pure driver+py4j time (measured at 1M: 8.3 s vs
+    1.3 s per ADC probe, §1/§5 — r14). The `L` suffix pins LongType
+    literals, exactly what `lit(python int)` produced, so the analyzed
+    predicate (and the plan-asserted pushdown) is unchanged. Ids must be
+    a non-empty iterable of ints."""
+    body = ",".join(f"{int(v)}L" for v in ids)
+    assert body, "lit_in needs a non-empty id list"
+    return F.expr(f"{name} IN ({body})")
 
 
 def dsum(col: Column | str, scale: int = 2) -> Column:

@@ -528,6 +528,57 @@ def test_path_algorithms(engine):
     assert legacy and legacy[0]["dist"] == 2
 
 
+def test_path_matches_bfs_levels(spark):
+    """PATH SHORTEST and ALL give what `bfs_levels` from `a` says of `b`
+    at every MAX, over fixture pairs of each node kind, `a == b`, unknown
+    nodes, a session edge and a deleted fixture edge. One multi-source
+    `bfs_levels` walk at depth 4 is the reference for every MAX ≤ 4: BFS
+    levels are exact, so a shallower walk is the same rows cut at MAX."""
+    from neumann_spark.engine import NeumannSparkEngine
+    from neumann_spark.graph.model import (NATION_BASE, REGION_BASE, SUPPLIER_BASE,
+                                           undirected_edges)
+    from neumann_spark.graph.traversal import bfs_levels
+    from neumann_spark.session import local_df
+
+    eng = NeumannSparkEngine(spark, SF_DIR)
+    eng.execute("NODE 9100001 pathtest")
+    eng.execute("EDGE CREATE 9100001 -> 1 : knows")
+    eng.execute(f"EDGE DELETE {SUPPLIER_BASE + 1} -> 5")
+    pairs = [(1, 1), (424242, 424242), (1, 424242),
+             (NATION_BASE + 1, REGION_BASE + 1), (1, REGION_BASE + 4),
+             (REGION_BASE, 5), (17, 5), (17, 2), (SUPPLIER_BASE + 1, 5),
+             (9100001, 5)]
+    sources = sorted({a for a, _ in pairs})
+    walk = bfs_levels(undirected_edges(eng._edges), local_df(
+        spark, [(a, a) for a in sources], "source bigint, node bigint"), 4)
+    dist = {(r["source"], r["node"]): r["dist"] for r in walk.collect()}
+    assert {dist.get(p) for p in pairs} == {None, 0, 1, 2, 3, 4}
+    for a, b in pairs:
+        d = dist.get((a, b))
+        for max_d in range(1, 5):
+            want = [(b, d)] if d is not None and d <= max_d else []
+            for algo, col in (("SHORTEST", "dist"), ("ALL", "hops")):
+                out = eng.execute(f"PATH {algo} {a} -> {b} MAX {max_d}")
+                assert out.columns == ["node", col]
+                assert [tuple(r) for r in out.collect()] == want, (algo, a, b, max_d)
+    assert eng.execute("PATH 17 -> 5 MAX 4 LIMIT 0").collect() == []
+    assert [tuple(r) for r in eng.execute("PATH 17 -> 5 MAX 4 LIMIT 1").collect()] \
+        == [(5, 4)]
+
+
+def test_path_runs_one_job_per_two_hops(spark):
+    """A point PATH collects the edges incident to both frontiers once per
+    round: `MAX 2` is one Spark job and `MAX 4` two (`bfs_levels` ran 9
+    and 17), and `a == b` runs none."""
+    from neumann_spark.engine import NeumannSparkEngine
+
+    eng = NeumannSparkEngine(spark, SF_DIR)
+    for cmd, budget in (("PATH 1 -> 17 MAX 2", 1), ("PATH 17 -> 5 MAX 4", 2),
+                        ("PATH ALL 1 -> 424242 MAX 4", 2), ("PATH 5 -> 5 MAX 4", 0)):
+        _, jobs = jobs_run(spark, lambda: eng.execute(cmd).collect())
+        assert jobs <= budget, (cmd, jobs)
+
+
 def test_find_full_syntax(engine):
     hubs = engine.execute("FIND NODE hub").collect()
     assert all(r["data"] == "hub" for r in hubs) and len(hubs) >= 1

@@ -129,6 +129,22 @@ def test_load_runs_no_job(spark):
     assert len(frames) == len(TABLES) and jobs == 0
 
 
+def test_load_pins_utc_in_a_session_without_a_zone(spark):
+    """`load` pins the session zone to UTC, also in a session that never
+    set `spark.sql.session.timeZone` (reading the key with a default
+    validates that default as a zone id and raises)."""
+    from neumann_spark.catalog import load
+
+    key = "spark.sql.session.timeZone"
+    s = spark.newSession()
+    s.conf.unset(key)
+    assert load(s, SF_DIR, "embeddings").columns
+    assert s.conf.get(key) == "UTC"
+    s.conf.set(key, "Asia/Tokyo")
+    load(s, SF_DIR, "embeddings")
+    assert s.conf.get(key) == "UTC"
+
+
 def test_merge_into_rewrites_only_touched_partitions(spark, tmp_path):
     """MERGE INTO over partitioned parquet: matched rows replaced,
     unmatched inserted, and the UNTOUCHED partition directories are
