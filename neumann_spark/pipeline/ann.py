@@ -21,6 +21,7 @@ exact brute force (functions.vector.knn) stays the correctness baseline.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -28,8 +29,7 @@ from neumann_spark.catalog import load, load_corpus
 from neumann_spark.registry import register
 from neumann_spark.session import scratch_dir as _scratch_dir
 from neumann_spark.session import stage_move_part as _stage_move_part
-from neumann_spark.session import (bounded_actions as _bounded_actions,
-                                   empty_df, local_df, run_actions_parallel)
+from neumann_spark.session import empty_df, local_df, run_actions_parallel
 from neumann_spark.sqlutil import lit_in
 
 LSH_PLANES = 4
@@ -189,18 +189,15 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sq_dist_expr(vec: Column, centroid: list[float]) -> Column:
-    """Rounded squared distance of `vec` to a literal centroid — one JVM
-    fold, map-only (the rounding makes assignments engine-portable)."""
-    arr = F.array(*[F.lit(float(v)) for v in centroid])
-    return F.round(
-        F.aggregate(
-            F.zip_with(vec, arr, lambda x, c: (x - c) * (x - c)),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        ),
-        6,
-    )
+def _sq_dist_expr(vec: Column | str, other: Column | str | list) -> Column:
+    """Round6 squared L2 distance of array `vec` to `other` (an array
+    column, or a literal centroid list) — one JVM left fold, map-only
+    (the rounding makes assignments and ADC grids engine-portable)."""
+    if not isinstance(other, (Column, str)):
+        other = F.array(*[F.lit(float(v)) for v in other])
+    return F.round(F.aggregate(
+        F.zip_with(vec, other, lambda x, c: (x - c) * (x - c)),
+        F.lit(0.0), lambda a, v: a + v), 6)
 
 
 # IVF index cache per (session, sf_dir): build once, reuse across the
@@ -536,8 +533,6 @@ def _super_split(centroids: list, k2: int | None = None,
     dropped from BOTH (probing one could never yield a candidate)."""
     import math
 
-    import numpy as np
-
     cents = sorted((int(c), [float(x) for x in v]) for c, v in centroids)
     K = len(cents)
     if k2 is None:
@@ -656,12 +651,7 @@ def pq_build(emb: DataFrame, S: int, subdim: int, k: int,
         )
         cent = local_df(emb.sparkSession, cent_rows,
                         "s int, code int, cent array<double>")
-        d = F.round(
-            F.aggregate(
-                F.zip_with("sub", "cent", lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0), lambda a, x: a + x),
-            6,
-        )
+        d = _sq_dist_expr("sub", "cent")
         if use_two_level:
             # two-level assignment (VERDICT r12 item 1): route each row
             # through its GRAPH_SUPER_PROBES nearest super-centroids and
@@ -918,14 +908,7 @@ def ann_sq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.array(*[deq_expr(i) for i in range(1, DIM + 1)]).alias("dv")
     )
     q = deq.filter(F.col("vec_id") == 0).select(F.col("dv").alias("qv"))
-    dist = F.round(
-        F.aggregate(
-            F.zip_with(F.col("dv"), F.col("qv"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
+    dist = _sq_dist_expr("dv", "qv")
     return (
         deq.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -2002,12 +1985,7 @@ def _nearest_clusters(spark: SparkSession, u: DataFrame,
     pair-shard kernel, repaired by the NND rounds and gated end-to-end
     by the ladder recall. Fixture indexes (K = 45) stay flat/exact;
     exhaustive probes are bit-equal to flat (differential-tested)."""
-    dcl = F.round(
-        F.aggregate(
-            F.zip_with("embedding", "cent", lambda x, c: (x - c) * (x - c)),
-            F.lit(0.0), lambda a, x: a + x),
-        6,
-    )
+    dcl = _sq_dist_expr("embedding", "cent")
     wc = Window.partitionBy("vec_id").orderBy("d", "cl")
     use2 = (two_level if two_level is not None
             else len(warm_centroids) > GRAPH_TWO_LEVEL_MIN_K)
@@ -2372,12 +2350,7 @@ def _pq_assign_long(u_new: DataFrame, codebooks: list,
         ).alias("x"),
     ).select("vec_id", F.col("x.s").alias("s"), F.col("x.sub").alias("sub"))
     cent = _codebook_df(spark, codebooks)
-    d = F.round(
-        F.aggregate(
-            F.zip_with("sub", "cent", lambda x, c: (x - c) * (x - c)),
-            F.lit(0.0), lambda a, x: a + x),
-        6,
-    )
+    d = _sq_dist_expr("sub", "cent")
     return (
         subs.join(F.broadcast(cent), "s")
         .select("vec_id", "s", d.alias("d"), "code")
@@ -3552,16 +3525,37 @@ def _batch_luts(qdf: DataFrame, cent_df: DataFrame) -> DataFrame:
             F.broadcast(cent_df.withColumn(
                 "j", F.pmod(F.col("s"), F.lit(1)).cast("int"))),
             "j")
-        .select(
-            "qid", "s", "code",
-            F.round(
-                F.aggregate(
-                    F.zip_with(qslice, "cent",
-                               lambda x, c: (x - c) * (x - c)),
-                    F.lit(0.0), lambda acc, x: acc + x),
-                6,
-            ).alias("d"))
+        .select("qid", "s", "code", _sq_dist_expr(qslice, "cent").alias("d"))
     )
+
+
+def adc_grid(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """ADC distances of (n, S) code rows under one query's (S, K) int64
+    LUT of round6 subspace distances in 1e-6 units (`rint(d * 1e6)`).
+    Every term is exact on the grid, so the integer sum K is order-free
+    and K / 1e6 is the double nearest K·1e-6 — the double Spark's
+    `round(sum(d), 6)` returns over the same terms."""
+    return lut[np.arange(lut.shape[0]), codes].sum(axis=1) / 1e6
+
+
+def _lut_grid(luts: DataFrame, qids: list) -> dict:
+    """`_batch_luts` rows collected as {qid: (S, K) int64 LUT in 1e-6
+    units}, the operand `adc_grid` takes (the grid stays Spark's)."""
+    t = luts.toArrow()
+    pos = {q: i for i, q in enumerate(qids)}
+    lut = np.zeros((len(qids), GRAPH_PQ_S, GRAPH_PQ_K), dtype=np.int64)
+    lut[[pos[q] for q in t["qid"].to_pylist()], t["s"].to_numpy(),
+        t["code"].to_numpy()] = np.rint(t["d"].to_numpy() * 1e6)
+    return {q: lut[i] for i, q in enumerate(qids)}
+
+
+def _code_rows(codes: DataFrame) -> tuple:
+    """(vec_ids, (n, S) code matrix) of a (vec_id, s, code) frame, read
+    by one Arrow collect."""
+    t = codes.select("vec_id", "s", "code").toArrow()
+    order = np.lexsort((t["s"], t["vec_id"]))
+    return (t["vec_id"].to_numpy()[order][::GRAPH_PQ_S].tolist(),
+            t["code"].to_numpy()[order].reshape(-1, GRAPH_PQ_S))
 
 
 GRAPH_BATCH_ANCHORS = (0, 3, 7)
@@ -3639,9 +3633,11 @@ def _graph_batch_search(spark: SparkSession, sf_dir: str,
     lists, then per round the ADC-top-beam unexpanded nodes expand their
     top-c edges and the new candidates are ADC-ranked; finally the
     ADC-top-shortlist rescores exactly (or on the SQ8 tier). One round =
-    ONE edge probe + ONE ADC join serving every query, so the per-round
-    job floor amortizes over the batch (docs/DESIGN.md) — at high QPS
-    this is how a 100 TB deployment drains a query queue. Returns
+    ONE edge probe + ONE ADC scoring action serving every query (a code
+    scan scored on the driver, or a join in the frame-state regime), so
+    the per-round job floor amortizes over the batch (docs/DESIGN.md) —
+    at high QPS this is how a 100 TB deployment drains a query queue.
+    Returns
     (qid, vec_id, score): each anchor's top-k by (score desc, vec_id)."""
     index = index if index is not None else knn_graph_index(spark, sf_dir)
     edges, warm_codes, warm_centroids, codes_long, codebooks = index[:5]
@@ -3660,38 +3656,15 @@ def _graph_batch_search(spark: SparkSession, sf_dir: str,
         int(r["vec_id"]): [float(x) for x in r["embedding"]]
         for r in u.filter(lit_in("vec_id", qids)).collect()
     }
-    # probe selection stays a driver-side ranking of the k-row centroid
-    # list per anchor (bounded: |anchors| * k tuples), but the warm frame
-    # is ONE broadcast join of the (qid, cluster) probe pairs against the
-    # cluster-partitioned assignment table
-    probe_df = local_df(spark, [
-        (q, cid) for q in qids
-        for cid in _nearest_ids(qvs[q], warm_centroids, GRAPH_WARM_PROBES)
-    ], "qid bigint, cluster int")
-    warm = (
-        warm_codes.join(F.broadcast(probe_df), "cluster")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-    )
+    # probe selection is a driver-side ranking of the k-row centroid list
+    # per anchor (bounded: |anchors| * k tuples)
+    probes = {q: _nearest_ids(qvs[q], warm_centroids, GRAPH_WARM_PROBES)
+              for q in qids}
     cent_df = _codebook_df(spark, codebooks)
     qdf = local_df(spark,
         [(q, qvs[q]) for q in qids], "qid bigint, qv array<double>")
-    # every anchor's traversal LUT (qid, s, code, d), computed in Spark
-    # (HALF_UP round6 — the oracle grid) ONCE and checkpointed, so each
-    # round's ADC join reads it as a broadcast of materialized blocks
-    luts = _batch_luts(qdf, cent_df).localCheckpoint(eager=True)
     hint = (F.broadcast if len(qids) <= GRAPH_BATCH_BROADCAST_MAX
             else lambda df: df)
-
-    def adc(codes: DataFrame, pairs: DataFrame) -> DataFrame:
-        # pairs: (qid, vec_id). Each d is on the 1e-6 grid, so the rounded
-        # sum cannot depend on the order the 32 terms arrive in
-        return (
-            codes.join(hint(pairs), "vec_id")
-            .join(F.broadcast(luts), ["qid", "s", "code"])
-            .groupBy("qid", "vec_id")
-            .agg(F.round(F.sum("d"), 6).alias("d"))
-        )
 
     def probe_edges(srcs: list) -> DataFrame:
         # source-id pruning: up to GRAPH_PROBE_INLIST_MAX frontier sources
@@ -3729,54 +3702,61 @@ def _graph_batch_search(spark: SparkSession, sf_dir: str,
         )
 
     if len(qids) * beam <= GRAPH_PROBE_INLIST_MAX:
-        # DRIVER-STATE regime (r13): per-query evaluated state is bounded
+        # DRIVER-STATE regime: per-query evaluated state is bounded
         # (warm + beam·c·T rows each), so the running {vec_id: round6-d}
-        # maps are driver-sized, and the frontier is one literal src
-        # IN-list that prunes a block-partitioned edge table at the
-        # source. Each round is two bounded actions: the edge probe
-        # collect and the new-candidate ADC collect, whose literal
-        # vec_id IN-list reaches a persisted code table's parquet scan
-        # (row-group pruning — the r14 1M serve fix). AQE is scoped OFF:
-        # every plan here is bounded by construction and its join
-        # strategies are pinned by broadcast hints, while each adaptive
-        # query stage would cost one job; the returned rescore frame
-        # executes after the scope exits, under the session default.
+        # maps live on the driver, and every action is a filtered scan
+        # collected there — no exchange, so AQE adds no stage jobs. The
+        # Spark-computed LUT grid is collected once as int64 1e-6 units;
+        # the warm start is one scan of the probed clusters' members;
+        # each round is the edge probe (a literal src IN-list pruning a
+        # block-partitioned edge table) and one scan of the codes of ids
+        # this call has not fetched yet (a literal vec_id IN-list that
+        # reaches a persisted code table's parquet scan — the r14 1M serve
+        # fix), ADC-scored on the driver by `adc_grid`
+        lut = _lut_grid(_batch_luts(qdf, cent_df), qids)
+        code_of: dict = {}
         evald: dict = {q: {} for q in qids}
         expanded: dict = {q: set() for q in qids}
 
-        def score(codes: DataFrame, pairs: DataFrame) -> None:
-            for r in adc(codes, pairs).collect():
-                evald[int(r["qid"])][int(r["vec_id"])] = r["d"]
+        def score(cands: dict) -> None:
+            # cands: {qid: vec_ids}. Codes do not depend on the query, so
+            # a search fetches each id's codes once; ids absent from the
+            # code table stay unscored, as the frame-state join drops them
+            need = set().union(*cands.values()) - code_of.keys()
+            if need:
+                code_of.update(zip(*_code_rows(
+                    codes_long.filter(lit_in("vec_id", sorted(need))))))
+            for q, vs in cands.items():
+                if vs := [v for v in vs if v in code_of]:
+                    evald[q].update(zip(vs, adc_grid(lut[q], np.stack(
+                        [code_of[v] for v in vs])).tolist()))
 
-        with _bounded_actions(spark):
-            score(codes_long, warm)
-            for _ in range(rounds):
-                fr_pairs = [
-                    (q, vid)
-                    for q in qids
-                    for _, vid in sorted(
-                        (d, vid) for vid, d in evald[q].items()
-                        if vid not in expanded[q])[:beam]
-                ]
-                if not fr_pairs:
-                    break
-                by_src: dict = {}
-                for r in probe_edges(sorted({v for _, v in fr_pairs})) \
-                        .select("src", "dst").collect():
-                    by_src.setdefault(int(r["src"]), []).append(
-                        int(r["dst"]))
-                new_pairs: set = set()
-                for q, s0 in fr_pairs:
-                    expanded[q].add(s0)
-                    new_pairs.update(
-                        (q, dst) for dst in by_src.get(s0, ())
-                        if dst != q and dst not in evald[q])
-                if new_pairs:
-                    score(
-                        codes_long.filter(lit_in(
-                            "vec_id", sorted({v for _, v in new_pairs}))),
-                        local_df(spark, sorted(new_pairs),
-                                 "qid bigint, vec_id bigint"))
+        w = (warm_codes.filter(F.col("cluster").isin(
+            sorted(set().union(*probes.values()))))
+            .select("cluster", "vec_id").toArrow())
+        wc, wv = w["cluster"].to_numpy(), w["vec_id"].to_numpy()
+        score({q: wv[np.isin(wc, probes[q]) & (wv != q)].tolist()
+               for q in qids})
+        for _ in range(rounds):
+            fr_pairs = [
+                (q, vid)
+                for q in qids
+                for _, vid in sorted(
+                    (d, vid) for vid, d in evald[q].items()
+                    if vid not in expanded[q])[:beam]
+            ]
+            if not fr_pairs:
+                break
+            by_src: dict = {}
+            for r in probe_edges(sorted({v for _, v in fr_pairs})) \
+                    .select("src", "dst").collect():
+                by_src.setdefault(int(r["src"]), []).append(int(r["dst"]))
+            new: dict = {q: set() for q in qids}
+            for q, s0 in fr_pairs:
+                expanded[q].add(s0)
+                new[q].update(dst for dst in by_src.get(s0, ())
+                              if dst != q and dst not in evald[q])
+            score(new)
         if allowed is None:
             short_df = local_df(spark, [
                 (q, vid)
@@ -3797,11 +3777,34 @@ def _graph_batch_search(spark: SparkSession, sf_dir: str,
     # ONLY the collected frontier (beam·|anchors| pairs); the anti-join
     # against expanded_df runs executor-side. On a 4-core box it serves
     # 300 (filtered) and 512 anchors faster than one unchunked
-    # driver-state loop. Lazy checkpoints: each round's frontier collect materializes the
-    # truncated evald plan inside its own job. expanded_df seeds from a
-    # true empty LocalRelation and stays an unchecked union of T bounded
-    # driver-local frontier frames — re-planning it is cheaper than a
-    # per-round checkpoint job (§5)
+    # driver-state loop. The warm frame is ONE broadcast join of the
+    # (qid, cluster) probe pairs against the cluster-partitioned
+    # assignment table, and every anchor's LUT (qid, s, code, d) is
+    # checkpointed once, so each round's ADC join reads it as a broadcast
+    # of materialized blocks. Lazy checkpoints: each round's frontier
+    # collect materializes the truncated evald plan inside its own job.
+    # expanded_df seeds from a true empty LocalRelation and stays an
+    # unchecked union of T bounded driver-local frontier frames —
+    # re-planning it is cheaper than a per-round checkpoint job (§5)
+    probe_df = local_df(spark,
+        [(q, cid) for q in qids for cid in probes[q]],
+        "qid bigint, cluster int")
+    warm = (
+        warm_codes.join(F.broadcast(probe_df), "cluster")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id")
+    )
+    luts = _batch_luts(qdf, cent_df).localCheckpoint(eager=True)
+
+    def adc(codes: DataFrame, pairs: DataFrame) -> DataFrame:
+        # pairs: (qid, vec_id). Each d is on the 1e-6 grid, so the rounded
+        # sum cannot depend on the order the 32 terms arrive in
+        return (
+            codes.join(hint(pairs), "vec_id")
+            .join(F.broadcast(luts), ["qid", "s", "code"])
+            .groupBy("qid", "vec_id")
+            .agg(F.round(F.sum("d"), 6).alias("d"))
+        )
     evald_df = adc(codes_long, warm).localCheckpoint(eager=False)
     expanded_df = empty_df(spark, "qid bigint, vec_id bigint")
     for _ in range(rounds):
@@ -4092,18 +4095,14 @@ def load_graph_index(spark: SparkSession, path: str) -> tuple:
     warm_codes = spark.read.parquet(f"{path}/graph_warm_assign")
     codes_long = spark.read.parquet(f"{path}/graph_codes")
     sq_codes = spark.read.parquet(f"{path}/graph_sq_codes")
-    # the three bounded driver-side tables (warm centroids, codebooks, SQ
-    # grid) load concurrently — independent small collects whose job
-    # barriers otherwise serialize (§5); AQE scoped off (bounded
-    # single-stage scans gain nothing from adaptive re-planning and pay
-    # one extra query-stage job each under it)
-    with _bounded_actions(spark):
-        cent_rows, codebooks, grid_rows = run_actions_parallel([
-            lambda: spark.read.parquet(
-                f"{path}/graph_warm_centroids").collect(),
-            lambda: _read_codebooks(spark, f"{path}/graph_codebooks"),
-            lambda: spark.read.parquet(f"{path}/graph_sq_grid").collect(),
-        ], bounded_ok=True)  # three k-row driver tables, bounded by contract
+    # the three k-row driver-side tables (warm centroids, codebooks, SQ
+    # grid) load concurrently — independent scan collects whose job
+    # barriers otherwise serialize (§5)
+    cent_rows, codebooks, grid_rows = run_actions_parallel([
+        lambda: spark.read.parquet(f"{path}/graph_warm_centroids").collect(),
+        lambda: _read_codebooks(spark, f"{path}/graph_codebooks"),
+        lambda: spark.read.parquet(f"{path}/graph_sq_grid").collect(),
+    ])
     warm_centroids = sorted(
         (int(r["cluster"]), [float(x) for x in r["centroid"]])
         for r in cent_rows

@@ -1,6 +1,7 @@
 """SparkSession factory tuned for the local[N] harness but configured the way
-a 1000-executor cluster job would be: AQE on (runtime re-plan, skew-join
-handling, partition coalescing), shuffle partitions sized to the parallelism,
+a 1000-executor cluster job would be: AQE on (Spark's default, never
+switched off by the package: runtime re-plan, skew-join handling,
+partition coalescing), shuffle partitions sized to the parallelism,
 UTC session timezone (so timestamp semantics match the DuckDB oracle), and
 Arrow enabled for the few pandas-interchange paths.
 """
@@ -40,7 +41,6 @@ def get_spark(app_name: str = "neumann_spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(n, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # compute-dense stages (the ANN builds' pair-distance joins: tiny
         # shuffle BYTES, heavy per-row array math) are mis-coalesced by
@@ -139,49 +139,7 @@ def local_df(spark: SparkSession, data, schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
-_BOUNDED_SCOPE_LOCK = __import__("threading").Lock()
-_BOUNDED_SCOPE_DEPTH = 0
-
-
-def bounded_actions(spark: SparkSession):
-    """Context manager scoping AQE OFF around a driver loop whose every
-    action is a BOUNDED single-job plan (a few thousand rows by
-    construction — ANN serve rounds, validation probes). For such plans
-    adaptive execution buys nothing — runtime stats cannot improve a
-    plan whose sizes are known and tiny, and join strategies inside the
-    scope are pinned with explicit broadcast hints — while its
-    per-exchange query stages cost one sequentially-submitted job each
-    (measured: 4 jobs/round vs 2 on the identical serve plan,
-    tools/job_probe.py). Scale-safe by the same argument: the scoped
-    plans stay bounded at any corpus size, so no data-proportional
-    stage ever runs without AQE. The conf is restored on exit, so
-    frames RETURNED from the scope execute under the session default.
-
-    The flipped conf is SESSION-GLOBAL, so concurrent driver-thread
-    actions inside the scope would silently run data-proportional jobs
-    with AQE off: `run_actions_parallel` refuses to fan out while any
-    scope is open (VERDICT r13 item 2)."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _scope():
-        global _BOUNDED_SCOPE_DEPTH
-        key = "spark.sql.adaptive.enabled"
-        prior = spark.conf.get(key, "true")
-        with _BOUNDED_SCOPE_LOCK:
-            _BOUNDED_SCOPE_DEPTH += 1
-        spark.conf.set(key, "false")
-        try:
-            yield
-        finally:
-            spark.conf.set(key, prior)
-            with _BOUNDED_SCOPE_LOCK:
-                _BOUNDED_SCOPE_DEPTH -= 1
-
-    return _scope()
-
-
-def run_actions_parallel(thunks, bounded_ok: bool = False) -> list:
+def run_actions_parallel(thunks) -> list:
     """Run independent Spark actions (e.g. sibling parquet writes of one
     index persist) concurrently from driver threads, returning their
     results in input order. Spark schedules jobs from separate driver
@@ -189,23 +147,8 @@ def run_actions_parallel(thunks, bounded_ok: bool = False) -> list:
     frames cost ~max(write) wall instead of Σ(write) — and on a cluster
     the per-job commit barriers overlap instead of serializing (§5). The
     first exception (if any) re-raises in the caller after all threads
-    finish, so no thunk is left running against a torn-down session.
-
-    Mutually exclusive with an open `bounded_actions` scope unless the
-    caller passes `bounded_ok=True` to attest every thunk's plan is
-    bounded by construction: the scope flips session-global conf, so a
-    data-proportional fan-out inside it would run with AQE silently
-    off (VERDICT r13 item 2)."""
+    finish, so no thunk is left running against a torn-down session."""
     thunks = list(thunks)
-    if not bounded_ok and len(thunks) > 1:
-        with _BOUNDED_SCOPE_LOCK:
-            if _BOUNDED_SCOPE_DEPTH > 0:
-                raise RuntimeError(
-                    "run_actions_parallel called inside a bounded_actions "
-                    "scope: the scope holds session-global conf (AQE off), "
-                    "so parallel actions would execute under it. Run the "
-                    "fan-out outside the scope, or pass bounded_ok=True if "
-                    "every thunk is bounded by construction.")
     if len(thunks) <= 1:
         return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor

@@ -16,6 +16,18 @@ def engine(spark):
     return NeumannSparkEngine(spark, SF_DIR)
 
 
+@pytest.fixture(scope="module")
+def small_graph(engine):
+    """The nodes and edges the NEIGHBORS and PATH tests read, created
+    once per module so each of those tests also passes selected alone."""
+    for stmt in ("NODE 9000001 testlab", "NODE 9000002 testlab",
+                 "EDGE 9000001 9000002 knows 2.5",
+                 "NODE 9400001 hub", "NODE 9400002 spoke",
+                 "NODE 9400003 spoke", "EDGE 9400001 9400002 links 1.0",
+                 "EDGE 9400003 9400001 links 1.0"):
+        engine.execute(stmt)
+
+
 def test_engine_open_runs_no_job_once_graph_is_warm(spark, engine):
     """With the derived graph already checkpointed (by the module
     engine), opening another engine only declares scans: its 11 table
@@ -46,14 +58,13 @@ def test_show_tables(engine):
     assert {"customer", "lineitem", "embeddings"} <= names
 
 
+@pytest.mark.usefixtures("small_graph")
 def test_node_edge_neighbors(engine):
-    engine.execute("NODE 9000001 testlab")
-    engine.execute("NODE 9000002 testlab")
-    engine.execute("EDGE 9000001 9000002 knows 2.5")
     nbrs = engine.execute("NEIGHBORS '9000001'").collect()
     assert any(r["neighbor_id"] == 9000002 and r["edge_type"] == "knows" for r in nbrs)
 
 
+@pytest.mark.usefixtures("small_graph")
 def test_path(engine):
     rows = engine.execute("PATH '9000001' TO '9000002' MAX 3").collect()
     assert rows and rows[0]["dist"] == 1
@@ -491,12 +502,8 @@ def test_similar_full_syntax(engine):
     assert all(r["key"].startswith("doc:") for r in filtered)
 
 
+@pytest.mark.usefixtures("small_graph")
 def test_neighbors_direction_type(engine):
-    engine.execute("NODE 9400001 hub")
-    engine.execute("NODE 9400002 spoke")
-    engine.execute("NODE 9400003 spoke")
-    engine.execute("EDGE 9400001 9400002 links 1.0")
-    engine.execute("EDGE 9400003 9400001 links 1.0")
     out = engine.execute("NEIGHBORS 9400001 OUTGOING : links").collect()
     assert {r["neighbor_id"] for r in out} == {9400002}
     inc = engine.execute("NEIGHBORS 9400001 INCOMING : links").collect()
@@ -505,6 +512,7 @@ def test_neighbors_direction_type(engine):
     assert {r["neighbor_id"] for r in both} == {9400002, 9400003}
 
 
+@pytest.mark.usefixtures("small_graph")
 def test_neighbors_by_similarity(engine):
     v1 = "[" + ", ".join(["0.9"] * 64) + "]"
     # NOT colinear with v1 (constant vectors all have cosine 1.0 with each
@@ -519,6 +527,7 @@ def test_neighbors_by_similarity(engine):
     assert out[0]["neighbor_id"] == 9400002  # identical vector ranks first
 
 
+@pytest.mark.usefixtures("small_graph")
 def test_path_algorithms(engine):
     sp = engine.execute("PATH SHORTEST 9400002 -> 9400003 MAX 3").collect()
     assert sp and sp[0]["dist"] == 2

@@ -83,19 +83,15 @@ def make_graph_search(*, unit, books, codes, clusters, cent, cent_ids,
         b_width = beam or ann.GRAPH_B
         c_width = c or ann.GRAPH_C
         q = unit[qi]
-        luts = []
+        lut = np.zeros((ann.GRAPH_PQ_S, ann.GRAPH_PQ_K), dtype=np.int64)
         for s in range(ann.GRAPH_PQ_S):
             qs = q[s * ann.GRAPH_PQ_SUBDIM:(s + 1) * ann.GRAPH_PQ_SUBDIM]
-            lut = np.full(max(cid for cid, _ in books[s]) + 1, np.inf)
             for cid, c in books[s]:
-                lut[cid] = round(float(((qs - np.array(c)) ** 2).sum()), 6)
-            luts.append(lut)
+                lut[s, cid] = np.rint(
+                    round(float(((qs - np.array(c)) ** 2).sum()), 6) * 1e6)
 
         def adc(ids: np.ndarray) -> np.ndarray:
-            d = np.zeros(len(ids))
-            for s in range(ann.GRAPH_PQ_S):
-                d += luts[s][codes[ids, s]]
-            return np.round(d, 6)
+            return ann.adc_grid(lut, codes[ids])
 
         if entry == "coarse":
             starts = np.where(vec_ids % 16 == 0)[0]
